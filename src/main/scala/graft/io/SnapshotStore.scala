@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Snapshot-manifest table layout — the MERGE-style commit semantics
   * of an Iceberg table (overwrite-partition + snapshot isolation),
@@ -10,6 +11,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   *  - data for partition `p`, attempt `t` lives under
   *    `<root>/data/p_<p>/a_<t>/` — attempts NEVER overwrite in place;
+  *    a write covering several partitions stages under
+  *    `<root>/data/_run_<t>/` and renames each partition's dir into
+  *    its attempt dir before that partition's commit;
   *  - `<root>/snapshots/v<N>.manifest` is an immutable JSON-lines file
   *    listing every partition's current data path + lineage metrics;
   *  - a commit writes the new data dir, then writes the next manifest
@@ -47,6 +51,13 @@ final class SnapshotStore(spark: SparkSession, root: String) {
   def newDataPath(part: Int): String =
     s"$root/data/p_$part/a_${System.nanoTime()}"
 
+  /** Fresh staging location for a write that covers several partitions
+    * at once; its per-partition dirs are renamed to [[newDataPath]]s
+    * before commit. No manifest ever references it, so a killed run's
+    * staging dir is an orphan that [[expire]] collects. */
+  def newStagingPath(): String =
+    s"$root/data/_run_${System.nanoTime()}"
+
   /** Highest committed snapshot version, if any. */
   def currentVersion(): Option[Long] = {
     val dir = new Path(snapDir)
@@ -71,15 +82,20 @@ final class SnapshotStore(spark: SparkSession, root: String) {
 
   /** Commit partition `part` at `dataPath` into a new snapshot:
     * carries every other partition's entry forward, replaces this
-    * partition's (MERGE/overwrite-partition). Returns the version. */
+    * partition's (MERGE/overwrite-partition). Returns the version.
+    *
+    * `written` is the schema of the DataFrame the caller wrote to
+    * `dataPath`; its fingerprint is taken as Spark's file source reads
+    * it back (every field nullable, see [[SnapshotStore.asRead]]), so
+    * no Spark job runs. Without it the data's footer schema is read
+    * back instead (one Spark job). */
   def commit(part: Int, dataPath: String, nDocs: Long, nSpans: Long,
-      nFailures: Long): Long = {
-    // one footer read per COMMIT buys every future read() the right
+      nFailures: Long, written: Option[StructType] = None): Long = {
+    // one fingerprint per COMMIT buys every future read() the right
     // to skip Spark's all-files schema-merge pass (see read())
     val schemaHash = try {
-      val json = spark.read.parquet(dataPath).schema.json
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(json.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      SnapshotStore.schemaHash(written.map(SnapshotStore.asRead)
+        .getOrElse(spark.read.parquet(dataPath).schema))
     } catch { case _: Exception => "" }
     val cur = currentVersion()
     val next = cur.getOrElse(0L) + 1
@@ -176,7 +192,14 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     val dataDir = new Path(s"$root/data")
     var removed = 0
     if (fs.exists(dataDir)) {
-      fs.listStatus(dataDir).filter(_.isDirectory).foreach { pDir =>
+      val (staging, pDirs) = fs.listStatus(dataDir).filter(_.isDirectory)
+        .partition(_.getPath.getName.startsWith("_run_"))
+      // a killed run's staging dir (see newStagingPath) goes whole
+      staging.foreach { st =>
+        fs.delete(st.getPath, true)
+        removed += 1
+      }
+      pDirs.foreach { pDir =>
         // a LEGACY partition dir (pre-manifest release) holds parquet
         // FILES directly under p_N; if the manifest doesn't reference
         // p_N itself (a backfilled entry would), those files are
@@ -223,5 +246,29 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     Entry(grabNum("part").toInt, grabStr("path"), grabNum("n_docs"),
       grabNum("n_spans"), grabNum("n_failures"), grabStr("committed_at"),
       grabStr("schema", required = false))
+  }
+}
+
+object SnapshotStore {
+
+  /** md5 of a schema's JSON: the manifest's `schema` fingerprint. */
+  def schemaHash(schema: StructType): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(schema.json.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  /** A written schema as Spark's file source reads it back: every
+    * field, array element and map value nullable, at every depth. A
+    * fingerprint that disagreed with the read-back one would make
+    * manifests of old and new commits look divergent and force
+    * `mergeSchema` reads. */
+  def asRead(schema: StructType): StructType =
+    nullable(schema).asInstanceOf[StructType]
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
   }
 }

@@ -1,23 +1,35 @@
 package graft.run
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.io.Checkpoint
 import graft.stages.{ExtractConfig, Extraction}
 
-/** Checkpointed extraction job over a span table — the engine twin of
+/** Resumable extraction job over a span table — the engine twin of
   * `python ocr_pipeline.py <data_path>` (ocr_pipeline.py:445-538).
   *
   * Usage: ExtractMain <spansParquet> <outRoot> [nParts]
   *
   * The corpus is bucketed into `nParts` logical partitions by doc_id
-  * hash (the analog of the reference's directory partitions). Each
-  * partition is processed and committed independently with lineage
-  * metrics; a killed run resumes from the last committed partition
-  * (Checkpoint). Within a partition the plan is fully narrow — scan →
-  * codegen'd span stages → typed estimate map → write — with one tiny
-  * aggregate at the end for the corpus report (S11).
+  * hash (the analog of the reference's directory partitions). The
+  * snapshot manifest ([[graft.io.SnapshotStore]]) is the only commit
+  * record: one manifest version per partition, carrying its lineage
+  * metrics. A run processes every pending partition in ONE pass — one
+  * scan, one codegen'd stage chain, one write job partitioned by part
+  * — then commits the partitions one by one in ascending order, each
+  * by renaming its staged dir into a fresh attempt dir and publishing
+  * a manifest. The plan is fully narrow, with one tiny aggregate at
+  * the end for the corpus report (S11).
+  *
+  * Crash granularity: a run killed during its write job commits
+  * nothing; one killed between commits keeps the partitions committed
+  * so far. Either way the next run reprocesses exactly the partitions
+  * without a manifest entry and converges to the same snapshot
+  * content; the killed run's staging dir is an orphan that
+  * `SnapshotStore.expire` removes.
   */
 object ExtractMain {
 
@@ -66,16 +78,16 @@ object ExtractMain {
     if (snap.currentVersion().isDefined) return
     val legacy = ckpt.lineage().collect()
     if (legacy.isEmpty) return
-    val fs = new org.apache.hadoop.fs.Path(outRoot)
+    val fs = new Path(outRoot)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     legacy.foreach { r =>
       val p = r.getAs[Int]("part")
-      val dataDir = new org.apache.hadoop.fs.Path(s"$outRoot/data/p_$p")
-      if (fs.exists(new org.apache.hadoop.fs.Path(dataDir, "_SUCCESS"))) {
-        val legacyAttempt = new org.apache.hadoop.fs.Path(dataDir, "a_legacy")
+      val dataDir = new Path(s"$outRoot/data/p_$p")
+      if (fs.exists(new Path(dataDir, "_SUCCESS"))) {
+        val legacyAttempt = new Path(dataDir, "a_legacy")
         fs.mkdirs(legacyAttempt)
         fs.listStatus(dataDir).filter(_.isFile).foreach { f =>
-          fs.rename(f.getPath, new org.apache.hadoop.fs.Path(
+          fs.rename(f.getPath, new Path(
             legacyAttempt, f.getPath.getName))
         }
         val v = snap.commit(p, legacyAttempt.toString, r.getAs[Long]("n_docs"),
@@ -92,40 +104,31 @@ object ExtractMain {
       backup: Boolean = false, cfg: ExtractConfig = ExtractConfig()): Unit = {
     import spark.implicits._
     val ckpt = new Checkpoint(spark, outRoot)
-    // snapshot manifests are the commit source of truth (MERGE-style
-    // overwrite-partition + snapshot isolation; see SnapshotStore);
-    // the per-partition state markers remain as the backup/pre-image
-    // location and a best-effort mirror for Checkpoint API users
     val snap = new graft.io.SnapshotStore(spark, outRoot)
-    val docs = spark.read.parquet(inPath)
-      .withColumn("part", pmod(xxhash64(col("doc_id")), lit(nParts)).cast("int"))
-
     backfillLegacy(spark, outRoot, ckpt, snap)
     val done = snap.done()
     val todo = (0 until nParts).filterNot(done.contains)
     println(s"[extract] partitions total=$nParts pending=${todo.size}")
 
-    // S7: backup only when the config can actually modify content —
-    // the reference's `if self._replacements and self.must_backup()`
-    // gate (lib/ocr_step.py:230-232)
-    val doBackup = backup && (cfg.replaceDict.nonEmpty || cfg.regexRule.nonEmpty)
-
-    todo.foreach { p =>
-      val slice = docs.filter($"part" === p).drop("part")
-      if (doBackup)
-        slice.write.mode(SaveMode.Overwrite).parquet(ckpt.backupPath(p))
-      // single pass: observe() collects lineage metrics during the write;
-      // every attempt writes a FRESH dir — commits replace metadata, not files
-      val attempt = snap.newDataPath(p)
-      val (out, obs) = Extraction.observed(Extraction.pipeline(slice, cfg))
-      out.write.mode(SaveMode.Overwrite).parquet(attempt)
-      val m = obs.get
-      val (nDocs, nSpans, nUnest) = (m("docs_parsed").asInstanceOf[Long],
-        m("spans_emitted").asInstanceOf[Long], m("docs_unestimated").asInstanceOf[Long])
-      ckpt.commit(p, nDocs, nSpans, nUnest)
-      val v = snap.commit(p, attempt, nDocs, nSpans, nUnest)
-      println(s"[extract] committed part=$p snapshot=v$v docs=$nDocs " +
-        s"spans=$nSpans unestimated=$nUnest")
+    if (todo.nonEmpty) {
+      val docs = spark.read.parquet(inPath)
+        .withColumn("part", pmod(xxhash64(col("doc_id")), lit(nParts)).cast("int"))
+        .filter(col("part").isin(todo: _*))
+      // S7: backup only when the config can actually modify content —
+      // the reference's `if self._replacements and self.must_backup()`
+      // gate (lib/ocr_step.py:230-232)
+      if (backup && (cfg.replaceDict.nonEmpty || cfg.regexRule.nonEmpty))
+        writeParts(docs, todo, snap.newStagingPath(), ckpt.backupPath)((_, _, _) => ())
+      // one write job for every pending part; observe() collects each
+      // part's lineage during it
+      val (out, obs) = Extraction.observedByPart(
+        Extraction.pipeline(docs, cfg, carry = Seq("part")), todo)
+      writeParts(out, todo, snap.newStagingPath(), snap.newDataPath) { (p, attempt, schema) =>
+        val (nDocs, nSpans, nUnest) = Extraction.partLineage(obs, p)
+        val v = snap.commit(p, attempt, nDocs, nSpans, nUnest, Some(schema))
+        println(s"[extract] committed part=$p snapshot=v$v docs=$nDocs " +
+          s"spans=$nSpans unestimated=$nUnest")
+      }
     }
 
     // corpus report over the CURRENT SNAPSHOT (consistent view;
@@ -166,6 +169,42 @@ object ExtractMain {
     val stats = Extraction.corpusReplStats(all).collect()
       .map(r => s"${r.getString(0)}:${r.getLong(1)}")
     println(s"[extract] replacement stats: ${stats.mkString(", ")}")
-    ckpt.lineage().show(truncate = false)
+    snap.entries().values.toSeq.sortBy(_.part).foreach { e =>
+      println(s"[extract] lineage part=${e.part} docs=${e.nDocs} spans=${e.nSpans} " +
+        s"unestimated=${e.nFailures} committed_at=${e.committedAt} path=${e.path}")
+    }
+  }
+
+  /** Writes `df` ONCE, partitioned by its int column `part`, into the
+    * fresh dir `staging`; then, for each of `parts` in ascending
+    * order, moves `staging/part=p` to `dest(p)` (replacing what is
+    * there) and calls `commit(p, dest(p), schema)` with the written
+    * data schema. A part without rows gets an empty file carrying the
+    * schema, so every part's dir reads back. Each dir gets the
+    * `_SUCCESS` marker of a plain write. The staging dir is removed
+    * last; a kill before that leaves it behind. */
+  def writeParts(df: DataFrame, parts: Seq[Int], staging: String, dest: Int => String)(
+      commit: (Int, String, StructType) => Unit): Unit = {
+    val spark = df.sparkSession
+    val stage = new Path(staging)
+    val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    df.write.partitionBy("part").parquet(staging)
+    val schema = df.drop("part").schema
+    parts.sorted.foreach { p =>
+      val target = new Path(dest(p))
+      val staged = new Path(stage, s"part=$p")
+      if (fs.exists(target)) fs.delete(target, true)
+      if (fs.exists(staged)) {
+        fs.mkdirs(target.getParent)
+        if (!fs.rename(staged, target))
+          throw new java.io.IOException(s"cannot move $staged to $target")
+        fs.create(new Path(target, "_SUCCESS")).close()
+      } else {
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+          .write.parquet(target.toString)
+      }
+      commit(p, target.toString, schema)
+    }
+    fs.delete(stage, true)
   }
 }

@@ -176,29 +176,34 @@ object Extraction {
   }
 
   /** Full pipeline over a span table. Input: DataFrame with columns
-    * (doc_id, spans). Output: Dataset[ProcessedDoc].
+    * (doc_id, spans). Output: Dataset[ProcessedDoc], plus the input
+    * columns named in `carry`, passed through unchanged after the
+    * ProcessedDoc fields (visible in `toDF()`, e.g. as a write's
+    * partition column).
     *
     * Hot path: ONE custom Catalyst expression ([[graft.sql.ProcessSpans]])
     * does the whole per-doc chain over raw ArrayData — no interpreted
     * HOF chain, no encoder round-trip. RTL-reorder configs (W2) run on
     * the same path via `ProcessConfig.reorderRtl`. */
-  def pipeline(docs: DataFrame, cfg: ExtractConfig = ExtractConfig()): Dataset[ProcessedDoc] = {
+  def pipeline(docs: DataFrame, cfg: ExtractConfig = ExtractConfig(),
+      carry: Seq[String] = Nil): Dataset[ProcessedDoc] = {
     val spark = docs.sparkSession
     import spark.implicits._
     val pcfg = graft.sql.ProcessConfig(
       cfg.replaceDict,
       cfg.regexRule.map(r => (r.pattern, r.old, r.nw)),
       cfg.minLineLen, cfg.denseMinLen, cfg.reorderRtl)
+    val carried = carry.map(col)
     docs
-      .select(col("doc_id"),
-        graft.sql.ProcessSpans.process(col("spans"), pcfg).as("p"))
-      .select(col("doc_id"), col("p.spans").as("spans"),
+      .select(Seq(col("doc_id"),
+        graft.sql.ProcessSpans.process(col("spans"), pcfg).as("p")) ++ carried: _*)
+      .select(Seq(col("doc_id"), col("p.spans").as("spans"),
         concat(lit(cfg.pagePrefix), substring_index(col("doc_id"), ".", 1)).as("page_id"),
         substring_index(col("doc_id"), ".", 1).as("file_identifier"),
         col("doc_id").as("file_name"),
         col("p.hit_ratio"), col("p.n_words"), col("p.n_errs"),
         col("p.n_lines_in"), col("p.n_wraps"), col("p.n_shorts"),
-        col("p.n_lines_out"), col("p.repl_stats"))
+        col("p.n_lines_out"), col("p.repl_stats")) ++ carried: _*)
       .as[ProcessedDoc]
   }
 
@@ -237,12 +242,40 @@ object Extraction {
   def observed(processed: Dataset[ProcessedDoc], name: String = "graft_metrics")
       : (DataFrame, org.apache.spark.sql.Observation) = {
     val obs = org.apache.spark.sql.Observation(name)
-    val df = processed.toDF().observe(obs,
-      count(lit(1)).as("docs_parsed"),
-      coalesce(sum(size(col("spans"))), lit(0L)).as("spans_emitted"),
-      count(when(col("hit_ratio") === Estimation.MissingRatio, 1)).as("docs_unestimated"))
+    val m = lineageMetrics(lit(true), "")
+    val df = processed.toDF().observe(obs, m.head, m.tail: _*)
     (df, obs)
   }
+
+  /** [[observed]] split by the int column `part` of a `carry`-ing
+    * [[pipeline]]: per part `p` of `parts`, the metrics
+    * `docs_parsed_p`, `spans_emitted_p` and `docs_unestimated_p` —
+    * conditional aggregates of one Observation, so one write job
+    * yields every part's lineage, exact under task retry (Observation
+    * merges only successful task attempts, unlike accumulators). Read
+    * them with [[partLineage]]. */
+  def observedByPart(processed: Dataset[ProcessedDoc], parts: Seq[Int],
+      name: String = "graft_part_metrics"): (DataFrame, org.apache.spark.sql.Observation) = {
+    require(parts.nonEmpty, "no parts to observe")
+    val obs = org.apache.spark.sql.Observation(name)
+    val m = parts.flatMap(p => lineageMetrics(col("part") === p, s"_$p"))
+    val df = processed.toDF().observe(obs, m.head, m.tail: _*)
+    (df, obs)
+  }
+
+  /** Part `p`'s (docs parsed, spans emitted, docs unestimated) from a
+    * completed [[observedByPart]] Observation. */
+  def partLineage(obs: org.apache.spark.sql.Observation, p: Int): (Long, Long, Long) = {
+    val m = obs.get
+    (m(s"docs_parsed_$p").asInstanceOf[Long], m(s"spans_emitted_$p").asInstanceOf[Long],
+      m(s"docs_unestimated_$p").asInstanceOf[Long])
+  }
+
+  private def lineageMetrics(keep: Column, suffix: String): Seq[Column] = Seq(
+    count(when(keep, 1)).as(s"docs_parsed$suffix"),
+    coalesce(sum(when(keep, size(col("spans")))), lit(0L)).as(s"spans_emitted$suffix"),
+    count(when(keep && col("hit_ratio") === Estimation.MissingRatio, 1))
+      .as(s"docs_unestimated$suffix"))
 
   /** S11 — estimation report sink, the `.wtr` analog
     * (ocr_pipeline.py:233-269): one header row (mean + five bins +

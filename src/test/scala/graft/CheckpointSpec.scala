@@ -59,11 +59,10 @@ class CheckpointSpec extends SparkSpecBase {
     val after = snap.entries()
     survivors.foreach { p => assert(before(p).path == after(p).path) }
 
-    // legacy per-partition markers still carry lineage metrics
-    val ckpt = new Checkpoint(spark, outRoot)
-    val lin = ckpt.lineage().collect()
+    // the manifest entries carry the lineage metrics
+    val lin = snap.entries().values.toSeq
     assert(lin.length == 4)
-    assert(lin.map(_.getAs[Long]("n_docs")).sum == 200)
+    assert(lin.map(_.nDocs).sum == 200)
   }
 
   test("expire keeps the current view, GCs unreferenced attempt dirs") {
@@ -187,6 +186,8 @@ class CheckpointSpec extends SparkSpecBase {
     val snap = new SnapshotStore(spark, outRoot)
     val full = snap.read().select($"doc_id", $"n_words").as[(String, Int)]
       .collect().sortBy(_._1).toSeq
+    val ckpt = new Checkpoint(spark, outRoot)
+    snap.entries().values.foreach(e => ckpt.commit(e.part, e.nDocs, e.nSpans, e.nFailures))
     new java.io.File(s"$outRoot/snapshots").listFiles().foreach(_.delete())
     (0 until 2).foreach { p =>
       val pDir = new java.io.File(s"$outRoot/data/p_$p")
@@ -231,5 +232,120 @@ class CheckpointSpec extends SparkSpecBase {
     assert(!new java.io.File(s"$outRoot/data/p_0/a_legacy").exists())
     assert(new java.io.File(s"$outRoot/data/p_9").listFiles().forall(_.isDirectory))
     assert(snap.read().count() == 60)
+  }
+
+  test("empty parts commit an empty dir; a killed run's staging dir stays invisible") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-empty").toString
+    val spansPath = s"$tmp/spans"
+    val outRoot = s"$tmp/out"
+    graft.gen.CorpusGen.docs(spark, 3, "interleaved")
+      .write.mode(SaveMode.Overwrite).parquet(spansPath)
+
+    // 3 docs over 8 parts: at least 5 parts are empty
+    ExtractMain.run(spark, spansPath, outRoot, nParts = 8)
+    val snap = new SnapshotStore(spark, outRoot)
+    assert(snap.done() == (0 until 8).toSet)
+    assert(new java.io.File(s"$outRoot/snapshots").listFiles()
+      .count(_.getName.endsWith(".manifest")) == 8)
+    assert(snap.entries().values.map(_.nDocs).sum == 3)
+    assert(snap.read().count() == 3)
+    assert(!new java.io.File(s"$outRoot/data").list().exists(_.startsWith("_run_")),
+      "a completed run removes its staging dir")
+
+    // a run killed during its write job leaves only its staging dir
+    val orphan = new java.io.File(s"$outRoot/data/_run_x")
+    val rows = spark.read.parquet(snap.entries().values.find(_.nDocs > 0).get.path)
+    assert(rows.count() > 0)
+    rows.write.parquet(s"$orphan/part=0")
+    java.nio.file.Files.writeString(new java.io.File(orphan, "_SUCCESS").toPath, "")
+    new java.io.File(s"$outRoot/snapshots/v8.manifest").delete()
+    val lost = (0 until 8).toSet -- snap.done()
+    assert(lost.size == 1)
+
+    ExtractMain.run(spark, spansPath, outRoot, nParts = 8)
+    assert(snap.done() == (0 until 8).toSet)
+    assert(snap.currentVersion().contains(8L))
+    assert(snap.read().count() == 3, "the orphan's rows must never be read")
+    val ids = snap.read().select($"doc_id").as[String].collect()
+    assert(ids.distinct.length == 3)
+
+    val (_, removed) = snap.expire(1)
+    assert(removed >= 1)
+    assert(!orphan.exists(), "expire removes a killed run's staging dir")
+    assert(snap.read().count() == 3)
+  }
+
+  test("written-schema fingerprint equals the read-back one") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val tmp = Files.createTempDirectory("graft-schema").toString
+    val snap = new SnapshotStore(spark, tmp)
+    def check(df: org.apache.spark.sql.DataFrame, part: Int): Unit = {
+      val path = snap.newDataPath(part)
+      df.write.parquet(path)
+      val readBack = spark.read.parquet(path).schema
+      assert(SnapshotStore.asRead(df.schema) == readBack)
+      assert(SnapshotStore.schemaHash(SnapshotStore.asRead(df.schema)) ==
+        SnapshotStore.schemaHash(readBack))
+      // both commit paths record the same fingerprint
+      snap.commit(part, path, 1, 1, 0, Some(df.schema))
+      val written = snap.entries()(part).schemaHash
+      snap.commit(part, path, 1, 1, 0)
+      assert(written.nonEmpty && written == snap.entries()(part).schemaHash)
+    }
+
+    val processed = graft.stages.Extraction.pipeline(
+      graft.gen.CorpusGen.docs(spark, 20, "interleaved").toDF()).toDF()
+    check(processed, 0)
+
+    val inner = StructType(Seq(
+      StructField("k", StringType, nullable = false),
+      StructField("vs", ArrayType(IntegerType, containsNull = false), nullable = false)))
+    val nested = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("items", ArrayType(inner, containsNull = false), nullable = false),
+      StructField("attrs", MapType(StringType,
+        ArrayType(inner, containsNull = false), valueContainsNull = false), nullable = false)))
+    val rows = Seq(Row(1L, Seq(Row("a", Seq(1, 2))), Map("x" -> Seq(Row("b", Seq(3))))))
+    check(spark.createDataFrame(spark.sparkContext.parallelize(rows), nested), 1)
+
+    // every commit fingerprinted alike: reads skip the schema merge
+    assert(snap.entries().values.map(_.schemaHash).toSet.size == 2)
+  }
+
+  test("one run submits one write job and no marker or schema-read jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val tmp = Files.createTempDirectory("graft-jobs").toString
+    val spansPath = s"$tmp/spans"
+    graft.gen.CorpusGen.docs(spark, 200, "interleaved")
+      .write.mode(SaveMode.Overwrite).parquet(spansPath)
+
+    val stacks = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.job.description") == "graft-sentinel")
+          sentinel.countDown()
+        else stacks.add(e.stageInfos.map(_.details).mkString("\n"))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      ExtractMain.run(spark, spansPath, s"$tmp/out", nParts = 4)
+      // the listener bus delivers in order: once the sentinel job is
+      // seen, every job of the run has been
+      spark.sparkContext.setJobDescription("graft-sentinel")
+      spark.range(1).count()
+      spark.sparkContext.setJobDescription(null)
+      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    import scala.jdk.CollectionConverters._
+    val jobs = stacks.asScala.toSeq
+    assert(!jobs.exists(_.contains("SnapshotStore.commit")), "schema read-back job")
+    assert(!jobs.exists(_.contains("Checkpoint.commit")), "marker commit job")
+    assert(jobs.count(_.contains("ExtractMain$.writeParts")) == 1, jobs.mkString("\n---\n"))
+    assert(new SnapshotStore(spark, s"$tmp/out").done() == Set(0, 1, 2, 3))
   }
 }
