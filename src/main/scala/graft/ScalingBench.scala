@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
   * local[4N], report docs/sec at both plus the scaling efficiency
   * `(thr_4N / thr_N) / 4` (target ≥ 0.8).
   *
-  * Usage: ScalingBench [nDocs] [N]  (defaults 40000, 8)
+  * Usage: ScalingBench [nDocs] [N] [full|read]  (defaults 40000, 8, full)
+  * — `full` times the extraction pipeline, `read` only the input scan.
   */
 object ScalingBench {
 
@@ -36,9 +37,6 @@ object ScalingBench {
     val mode = if (args.length > 2) args(2) else "full"
     def job(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = mode match {
       case "full" => graft.stages.Extraction.pipeline(df).toDF()
-      case "columns" => df.select(org.apache.spark.sql.functions.col("doc_id"),
-        graft.stages.Extraction.spanColumnStage(graft.stages.ExtractConfig())(
-          org.apache.spark.sql.functions.col("spans")).as("spans"))
       case "read" => df
     }
 

@@ -165,10 +165,12 @@ final class SnapshotStore(spark: SparkSession, root: String) {
 
   /** Expire history (the `expire_snapshots` maintenance op): keep the
     * newest `keepLast` manifests, delete older ones, then garbage-
-    * collect every attempt dir no surviving manifest references.
-    * Readers pinned to an expired version lose time travel — that is
-    * the retention trade; the current view is untouched. Returns
-    * (#manifests deleted, #data dirs deleted). */
+    * collect every attempt dir under `data/p_*` that no surviving
+    * manifest references, and every `data/_run_*` staging dir.
+    * Only directories are collected; commits never leave loose files
+    * under `data/p_*`. Readers pinned to an expired version lose time
+    * travel — that is the retention trade; the current view is
+    * untouched. Returns (#manifests deleted, #data dirs deleted). */
   def expire(keepLast: Int): (Int, Int) = {
     require(keepLast >= 1, "must keep at least the current snapshot")
     val dir = new Path(snapDir)
@@ -200,19 +202,9 @@ final class SnapshotStore(spark: SparkSession, root: String) {
         removed += 1
       }
       pDirs.foreach { pDir =>
-        // a LEGACY partition dir (pre-manifest release) holds parquet
-        // FILES directly under p_N; if the manifest doesn't reference
-        // p_N itself (a backfilled entry would), those files are
-        // orphans too — a dir-only GC would strand them forever
-        val pLive = referenced.contains(fs.makeQualified(pDir.getPath).toString)
-        fs.listStatus(pDir.getPath).foreach { child =>
-          if (child.isDirectory) {
-            if (!referenced.contains(fs.makeQualified(child.getPath).toString)) {
-              fs.delete(child.getPath, true)
-              removed += 1
-            }
-          } else if (!pLive) {
-            fs.delete(child.getPath, false)
+        fs.listStatus(pDir.getPath).filter(_.isDirectory).foreach { child =>
+          if (!referenced.contains(fs.makeQualified(child.getPath).toString)) {
+            fs.delete(child.getPath, true)
             removed += 1
           }
         }

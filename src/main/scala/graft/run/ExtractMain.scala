@@ -59,53 +59,11 @@ object ExtractMain {
     spark.stop()
   }
 
-  /** Legacy-layout migration: an output root written by the
-    * marker-only release has committed `state/p_N` markers and data
-    * parquet directly under `data/p_N` (no attempt dirs, no
-    * manifests). Resume keyed solely on the snapshot store would
-    * silently reprocess everything and strand the old files as
-    * orphans the manifest GC can't see. On startup, if markers exist
-    * but no manifest does, each completed legacy partition's loose
-    * files are MOVED into a synthetic `a_legacy` attempt dir and that
-    * dir is committed (lineage carried from the marker). Referencing
-    * `data/p_N` itself would be wrong: it is the PARENT of all future
-    * attempt dirs, so a later recommit would nest new files inside a
-    * path older manifests still list recursively — double-reads under
-    * time travel. Markers without completed data get an explicit
-    * full-reprocess warning instead of a silent one. */
-  def backfillLegacy(spark: SparkSession, outRoot: String,
-      ckpt: Checkpoint, snap: graft.io.SnapshotStore): Unit = {
-    if (snap.currentVersion().isDefined) return
-    val legacy = ckpt.lineage().collect()
-    if (legacy.isEmpty) return
-    val fs = new Path(outRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    legacy.foreach { r =>
-      val p = r.getAs[Int]("part")
-      val dataDir = new Path(s"$outRoot/data/p_$p")
-      if (fs.exists(new Path(dataDir, "_SUCCESS"))) {
-        val legacyAttempt = new Path(dataDir, "a_legacy")
-        fs.mkdirs(legacyAttempt)
-        fs.listStatus(dataDir).filter(_.isFile).foreach { f =>
-          fs.rename(f.getPath, new Path(
-            legacyAttempt, f.getPath.getName))
-        }
-        val v = snap.commit(p, legacyAttempt.toString, r.getAs[Long]("n_docs"),
-          r.getAs[Long]("n_spans"), r.getAs[Long]("n_failures"))
-        println(s"[extract] backfilled legacy part=$p into snapshot v$v")
-      } else {
-        println(s"[extract] WARNING: legacy marker for part=$p has no " +
-          s"completed data at $dataDir — the partition WILL be reprocessed")
-      }
-    }
-  }
-
   def run(spark: SparkSession, inPath: String, outRoot: String, nParts: Int,
       backup: Boolean = false, cfg: ExtractConfig = ExtractConfig()): Unit = {
     import spark.implicits._
     val ckpt = new Checkpoint(spark, outRoot)
     val snap = new graft.io.SnapshotStore(spark, outRoot)
-    backfillLegacy(spark, outRoot, ckpt, snap)
     val done = snap.done()
     val todo = (0 until nParts).filterNot(done.contains)
     println(s"[extract] partitions total=$nParts pending=${todo.size}")

@@ -88,7 +88,7 @@ object IngestXml {
     spark.read
       .option("wholetext", "true")
       // S2: recursive subtree scan (ocr_pipeline.py:312-319); the
-      // marker gate maps to Checkpoint partition pruning downstream
+      // marker gate maps to ExtractMain's pending-partition filter
       .option("recursiveFileLookup", "true")
       .option("pathGlobFilter", "*.xml")
       .text(paths: _*)

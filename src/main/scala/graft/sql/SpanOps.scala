@@ -3,54 +3,12 @@ package graft.sql
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Catalyst column-level operators over the span array
-  * `array<struct<kind,text,media_ref,offset>>`.
-  *
-  * All of these are higher-order-function compositions of built-in,
-  * codegen'd expressions — per SURVEY.md §4 no custom strategy is
-  * needed; the per-span transforms stay inside whole-stage codegen
-  * and are narrow (zero shuffle).
+/** Catalyst column-level operators built from built-in, codegen'd
+  * expressions: the span-array sort of the streaming pass, the C4
+  * charset sanitize of whole-text queries and the A5 histogram bin.
+  * (The per-document extraction chain is [[ProcessSpans]].)
   */
 object SpanOps {
-
-  val KindText = "text"
-
-  private def rebuildSpan(kind: Column, text: Column, mediaRef: Column, offset: Column): Column =
-    struct(kind.as("kind"), text.as("text"), mediaRef.as("media_ref"), offset.as("offset"))
-
-  /** Map only the text field of text-kind spans. */
-  def mapText(spans: Column)(f: Column => Column): Column =
-    transform(spans, s => {
-      val kind = s.getField("kind")
-      rebuildSpan(
-        kind,
-        when(kind === KindText, f(s.getField("text"))).otherwise(s.getField("text")),
-        s.getField("media_ref"),
-        s.getField("offset"))
-    })
-
-  /** C1 — ordered literal multi-replace over text spans
-    * (lib/ocr_step.py:245-251). Chain order = dict order, so earlier
-    * replacements feed later keys. */
-  def replaceChars(spans: Column, dict: Seq[(String, String)]): Column =
-    mapText(spans)(t => dict.foldLeft(t) { case (acc, (k, v)) =>
-      replace(acc, lit(k), lit(v))
-    })
-
-  // (A1 replacement statistics live in ProcessSpans / Extraction
-  // .replStatsOf; an unused column-based variant was removed in r3)
-
-  /** C3 — strip the five directional/BOM marks (lib/ocr_model.py:23-29). */
-  def stripMarks(spans: Column): Column =
-    mapText(spans)(t => translate(t, graft.text.TextRules.ClearMarks, ""))
-
-  /** F6 — empty-content cascade at span level: drop text spans whose
-    * content is blank (lib/ocr_step.py:581-602; the line/block levels
-    * of the cascade are implicit in the flat span model — a line whose
-    * tokens are all blank loses all its spans). Media spans pass. */
-  def dropBlank(spans: Column): Column =
-    filter(spans, s =>
-      s.getField("kind") =!= KindText || trim(s.getField("text")) =!= "")
 
   /** S8/W1 — canonical ordering: re-sort the span array by `offset`
     * (north_rule: output "re-sorted by offset"). Narrow, in-row sort. */
@@ -71,11 +29,6 @@ object SpanOps {
     val toks = filter(split(mapped, "\\s+"), t => length(t) > 1)
     array_join(toks, " ")
   }
-
-  /** F3/F7 — keep text spans with trimmed length ≥ n. */
-  def minLenFilter(spans: Column, n: Int): Column =
-    filter(spans, s =>
-      s.getField("kind") =!= KindText || length(trim(s.getField("text"))) >= n)
 
   /** A5 — histogram bin id: floor(ratio / step) clamped to bins-1
     * (lib/ocr_step.py:441-443). */

@@ -46,23 +46,18 @@ final case class ProcessedDoc(
     n_lines_out: Int,
     repl_stats: Map[String, Int] = Map.empty)
 
-/** Internal row shape of the HOF twin: cleaned spans for estimation +
-  * the raw pre-replacement spans for the stats pass. */
-private[stages] final case class CleanedWithRaw(
-    doc_id: String, spans: Seq[Span], raw_spans: Seq[Span])
-
 /** The extraction pipeline: the reference's per-document step chain
-  * (ocr_pipeline.py:379-441 with conf/ocr_config.ini:15-37) re-expressed
-  * as a composition of narrow Spark stages over `Dataset[Doc]`.
+  * (ocr_pipeline.py:379-441 with conf/ocr_config.ini:15-37) over a
+  * span table, plus its pure-Scala model and the corpus report sinks.
   *
-  * Execution shape (100 TB story): every stage is per-row (per-doc) —
-  * there is NO shuffle anywhere in the chain; Catalyst fuses the
-  * column stages into one whole-stage-codegen pass and the estimate
-  * stage is a single narrow typed `mapPartitions`. The only shuffle in
-  * the whole job is the final tiny corpus aggregate. Mega-doc skew is
-  * handled by spreading docs uniformly (repartition on doc_id hash)
-  * before the chain plus AQE; a 10^5-span doc is one task among many,
-  * never a hot partition.
+  * Execution shape (100 TB story): the whole per-document chain is ONE
+  * custom Catalyst expression ([[graft.sql.ProcessSpans]]) inside a
+  * single whole-stage-codegen projection — there is NO shuffle
+  * anywhere in the chain. The only shuffle in the whole job is the
+  * final tiny corpus aggregate. A 10^5-span mega-doc is one row of
+  * one task; nothing in the chain groups documents together.
+  * [[model]] is the independent plain-Scala statement of the same
+  * chain that the tests check the expression against.
   */
 object Extraction {
 
@@ -70,29 +65,6 @@ object Extraction {
     * (~10M lines ≈ a few hundred MB of text — the most one driver
     * writer should ever be asked to stream). */
   val WtrMaxRows: Long = 10L * 1000 * 1000
-
-  /** Column stage chain C1 → (C2) → F6 → S8: replace, regex-replace,
-    * blank-span drop, offset re-sort — all Catalyst HOFs, codegen'd,
-    * narrow. */
-  def spanColumnStage(cfg: ExtractConfig)(spans: Column): Column = {
-    val replaced = SpanOps.replaceChars(spans, cfg.replaceDict)
-    val afterRegex = cfg.regexRule match {
-      case Some(r) => regexStageCol(replaced, r)
-      case None    => replaced
-    }
-    SpanOps.sortByOffset(SpanOps.dropBlank(afterRegex))
-  }
-
-  /** C2 as a column op. Spark's `regexp_replace` cannot express
-    * "extract group-1 of the FIRST match, literal-replace inside it,
-    * then replace all copies of the matched literal" — compose
-    * regexp_extract + replace instead (SURVEY.md §2.8 C2). */
-  def regexStageCol(spans: Column, rule: RegexRule): Column =
-    SpanOps.mapText(spans) { t =>
-      val m = regexp_extract(t, rule.pattern, 1)
-      when(m === "", t)
-        .otherwise(replace(t, m, replace(m, lit(rule.old), lit(rule.nw))))
-    }
 
   /** Group consecutive cleaned text spans into lines by their
     * `line://` parent ref, preserving order — the engine's `get_lines`
@@ -175,6 +147,28 @@ object Extraction {
     stats.toMap
   }
 
+  /** Span clean-up of one document, the pure model of the chain
+    * [[graft.sql.ProcessSpans]] runs inline: on text spans C1 char
+    * replace → C2 regex replace, then drop text spans whose text is
+    * blank by `String.trim` (F6, lib/ocr_step.py:581-602), then a
+    * stable re-sort by offset (S8). Media spans pass untouched. */
+  def cleanSpans(spans: Seq[Span], cfg: ExtractConfig): Seq[Span] =
+    spans.flatMap { s =>
+      if (s.kind != Span.KindText) Some(s)
+      else {
+        val t1 = TextRules.replaceChars(s.text, cfg.replaceDict)._1
+        val t2 = cfg.regexRule.fold(t1)(r =>
+          TextRules.regexGroupReplace(t1, r.compiled, r.old, r.nw)._1)
+        if (t2.trim.isEmpty) None else Some(s.copy(text = t2))
+      }
+    }.sortBy(_.offset)
+
+  /** The pure model of [[pipeline]] for one document: estimation over
+    * the cleaned spans, replacement statistics over the raw ones. */
+  def model(doc: Doc, cfg: ExtractConfig): ProcessedDoc =
+    estimateDoc(Doc(doc.doc_id, cleanSpans(doc.spans, cfg)), cfg)
+      .copy(repl_stats = replStatsOf(doc.spans, cfg))
+
   /** Full pipeline over a span table. Input: DataFrame with columns
     * (doc_id, spans). Output: Dataset[ProcessedDoc], plus the input
     * columns named in `carry`, passed through unchanged after the
@@ -205,25 +199,6 @@ object Extraction {
         col("p.n_lines_in"), col("p.n_wraps"), col("p.n_shorts"),
         col("p.n_lines_out"), col("p.repl_stats")) ++ carried: _*)
       .as[ProcessedDoc]
-  }
-
-  /** Reference composition of built-in HOF stages + typed estimate map
-    * — semantically identical to [[pipeline]]; kept as the
-    * cross-validation twin (different mechanism, same spec). The raw
-    * spans ride along so the stats pass sees pre-replacement text. */
-  def pipelineHof(docs: DataFrame, cfg: ExtractConfig = ExtractConfig()): Dataset[ProcessedDoc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val cleaned = docs.select(
-      col("doc_id"),
-      spanColumnStage(cfg)(col("spans")).as("spans"),
-      col("spans").as("raw_spans"))
-    cleaned.as[CleanedWithRaw].mapPartitions { it =>
-      it.map { d =>
-        estimateDoc(Doc(d.doc_id, d.spans), cfg)
-          .copy(repl_stats = replStatsOf(d.raw_spans, cfg))
-      }
-    }
   }
 
   /** Corpus-level replacement statistics (the reference logs these per

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.SaveMode
 
-import graft.io.{Checkpoint, SnapshotStore}
+import graft.io.SnapshotStore
 import graft.run.ExtractMain
 
 /** Checkpoint/resume protocol (T1/J1): kill-resume idempotence — a
@@ -169,69 +169,6 @@ class CheckpointSpec extends SparkSpecBase {
     assert(m == 2 && d >= 1)
     assert(snap.read().count() == 3)
     assert(snap.read().columns.toSet == Set("doc_id", "n", "lang"))
-  }
-
-  test("legacy marker-only layout: backfill adopts data, expire GCs superseded files") {
-    import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-legacy").toString
-    val spansPath = s"$tmp/spans"
-    val outRoot = s"$tmp/out"
-    graft.gen.CorpusGen.docs(spark, 60, "interleaved")
-      .write.mode(SaveMode.Overwrite).parquet(spansPath)
-
-    // simulate the pre-manifest release: run normally, then strip the
-    // manifests and flatten each attempt dir up into data/p_N (the
-    // legacy layout: parquet files directly under the partition dir)
-    ExtractMain.run(spark, spansPath, outRoot, nParts = 2)
-    val snap = new SnapshotStore(spark, outRoot)
-    val full = snap.read().select($"doc_id", $"n_words").as[(String, Int)]
-      .collect().sortBy(_._1).toSeq
-    val ckpt = new Checkpoint(spark, outRoot)
-    snap.entries().values.foreach(e => ckpt.commit(e.part, e.nDocs, e.nSpans, e.nFailures))
-    new java.io.File(s"$outRoot/snapshots").listFiles().foreach(_.delete())
-    (0 until 2).foreach { p =>
-      val pDir = new java.io.File(s"$outRoot/data/p_$p")
-      val attempt = pDir.listFiles().filter(_.isDirectory).head
-      attempt.listFiles().foreach { f =>
-        java.nio.file.Files.move(f.toPath,
-          new java.io.File(pDir, f.getName).toPath)
-      }
-      attempt.delete()
-    }
-    assert(snap.currentVersion().isEmpty)
-
-    // resume: the backfill must ADOPT the legacy data — loose files
-    // move into a synthetic a_legacy attempt dir (NOT data/p_N itself,
-    // which is the parent of future attempts) and the corpus is
-    // byte-identical, not rebuilt
-    ExtractMain.run(spark, spansPath, outRoot, nParts = 2)
-    assert(snap.done() == Set(0, 1))
-    assert(snap.entries().values.forall(_.path.endsWith("a_legacy")),
-      s"reprocessed instead of adopting: ${snap.entries()}")
-    val resumed = snap.read().select($"doc_id", $"n_words").as[(String, Int)]
-      .collect().sortBy(_._1).toSeq
-    assert(resumed == full)
-
-    // the nesting regression this layout prevents: a version pinned
-    // BEFORE a later recommit must keep reading exactly its own files
-    val vAdopt = snap.currentVersion().get
-    snap.compact(0)
-    assert(snap.read(Some(vAdopt)).count() == 60,
-      "time-travel read double-counts after recommit")
-    assert(snap.read().count() == 60)
-
-    // expire then GCs the superseded a_legacy dir like any attempt —
-    // and still sweeps loose files under a partition dir no manifest
-    // references (a warned, never-backfilled root)
-    val stray = new java.io.File(s"$outRoot/data/p_9")
-    stray.mkdirs()
-    java.nio.file.Files.writeString(
-      new java.io.File(stray, "orphan.parquet").toPath, "x")
-    val (_, removed) = snap.expire(1)
-    assert(removed >= 2, s"expected a_legacy dir + stray file GC'd: $removed")
-    assert(!new java.io.File(s"$outRoot/data/p_0/a_legacy").exists())
-    assert(new java.io.File(s"$outRoot/data/p_9").listFiles().forall(_.isDirectory))
-    assert(snap.read().count() == 60)
   }
 
   test("empty parts commit an empty dir; a killed run's staging dir stays invisible") {

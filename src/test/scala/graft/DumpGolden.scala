@@ -4,11 +4,12 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import graft.model.{Doc, Span}
 import graft.parse.OcrXmlParser
+import graft.stages.{ExtractConfig, Extraction, RegexRule}
 import graft.text.TextRules
 
 /** One-shot generator for the stored golden span sequences
   * (FIXTURES.md §3): derives the expected post-pipeline sequence for
-  * the reference fixtures from the PURE reference-semantics path
+  * the reference fixtures from the pure model `Extraction.cleanSpans`
   * (TextRules — independent of the Catalyst implementation) and stores
   * it under src/test/resources/golden/ as TSV
   * `kind<TAB>text<TAB>media_ref<TAB>offset`.
@@ -22,17 +23,10 @@ object DumpGolden {
     "1667522809_J_0073_0512", "urn+nbn+de+gbv+3+1-121915-p0159-6_ger",
     "1667524704_J_0173_0173", "0041", "1123596")
 
-  def goldenFor(doc: Doc): Seq[Span] = {
-    val dict = TextRules.FixtureReplaceDict
-    doc.spans.map { s =>
-      if (s.kind == Span.KindText) {
-        val (t1, _) = TextRules.replaceChars(s.text, dict)
-        val (t2, _) = TextRules.regexGroupReplace(t1, TextRules.FixtureRegex, "3", "s")
-        s.copy(text = t2)
-      } else s
-    }.filter(s => s.kind != Span.KindText || s.text.trim.nonEmpty)
-      .sortBy(_.offset)
-  }
+  def goldenFor(doc: Doc): Seq[Span] =
+    Extraction.cleanSpans(doc.spans, ExtractConfig(
+      replaceDict = TextRules.FixtureReplaceDict,
+      regexRule = Some(RegexRule(TextRules.FixtureRegex.pattern, "3", "s"))))
 
   def main(args: Array[String]): Unit = {
     val resDir = Paths.get("/root/reference/tests/resources")

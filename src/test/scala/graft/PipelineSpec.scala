@@ -7,9 +7,9 @@ import graft.parse.OcrXmlParser
 import graft.stages.{ExtractConfig, Extraction, ProcessedDoc, RegexRule}
 import graft.text.TextRules
 
-/** End-to-end pipeline semantics over Spark: the Catalyst column path
-  * must produce exactly the span sequence the reference semantics
-  * (pure TextRules path) dictate — span-sequence equality
+/** End-to-end pipeline semantics over Spark: the expression path must
+  * produce exactly the span sequence the reference semantics (the pure
+  * model `Extraction.cleanSpans`) dictate — span-sequence equality
   * `(kind, text, media_ref, order)` per BASELINE.json. */
 class PipelineSpec extends SparkSpecBase {
 
@@ -21,24 +21,6 @@ class PipelineSpec extends SparkSpecBase {
     Doc(name.stripSuffix(".xml"), OcrXmlParser.toSpans(name.stripSuffix(".xml"), parsed))
   }
 
-  /** Reference-semantics golden path, computed with the pure rules
-    * (independent implementation of the same spec). */
-  private def goldenSpans(doc: Doc, cfg: ExtractConfig): Seq[Span] = {
-    val replaced = doc.spans.map { s =>
-      if (s.kind == Span.KindText) {
-        val (t1, _) = TextRules.replaceChars(s.text, cfg.replaceDict)
-        val t2 = cfg.regexRule match {
-          case Some(r) => TextRules.regexGroupReplace(t1, r.compiled, r.old, r.nw)._1
-          case None    => t1
-        }
-        s.copy(text = t2)
-      } else s
-    }
-    replaced
-      .filter(s => s.kind != Span.KindText || s.text.trim.nonEmpty)
-      .sortBy(_.offset)
-  }
-
   test("span-sequence equality: Catalyst stage chain == reference semantics (500_gray00003)") {
     assume(Files.isReadable(resDir.resolve("500_gray00003.xml")))
     import spark.implicits._
@@ -46,7 +28,7 @@ class PipelineSpec extends SparkSpecBase {
       regexRule = Some(RegexRule("([aeioubcglnt]3[:-]*\")", "3", "s")))
     val doc = fixtureDoc("500_gray00003.xml")
     val out = Extraction.pipeline(Seq(doc).toDF(), cfg).collect().head
-    val golden = goldenSpans(doc, cfg)
+    val golden = Extraction.cleanSpans(doc.spans, cfg)
     assert(out.spans.map(s => (s.kind, s.text, s.media_ref, s.offset)) ==
       golden.map(s => (s.kind, s.text, s.media_ref, s.offset)))
   }
@@ -59,7 +41,7 @@ class PipelineSpec extends SparkSpecBase {
     val out = Extraction.pipeline(docs.toDF(), cfg)
       .collect().map(p => p.doc_id -> p.spans).toMap
     docs.foreach { d =>
-      val golden = goldenSpans(d, cfg)
+      val golden = Extraction.cleanSpans(d.spans, cfg)
       assert(out(d.doc_id).map(s => (s.kind, s.text, s.media_ref, s.offset)) ==
         golden.map(s => (s.kind, s.text, s.media_ref, s.offset)), s"doc ${d.doc_id}")
     }

@@ -2,12 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.model.Doc
+import graft.model.{Doc, Span}
 import graft.parse.OcrXmlParser
 import graft.stages.{ExtractConfig, Extraction, RegexRule}
 
 /** The custom-Expression hot path must be row-for-row identical to the
-  * HOF + typed reference composition — on the real fixtures and on all
+  * pure-Scala model `Extraction.model` — on the real fixtures and on all
   * generator profiles (including edge cases). */
 class ProcessSpansSpec extends SparkSpecBase {
 
@@ -16,7 +16,7 @@ class ProcessSpansSpec extends SparkSpecBase {
     val df = docs.toDF()
     val fast = Extraction.pipeline(df, cfg).collect()
       .map(p => p.doc_id -> p).toMap
-    val ref = Extraction.pipelineHof(df, cfg).collect()
+    val ref = docs.map(d => Extraction.model(d, cfg))
     assert(ref.length == fast.size)
     ref.foreach { r =>
       val f = fast(r.doc_id)
@@ -30,18 +30,29 @@ class ProcessSpansSpec extends SparkSpecBase {
     }
   }
 
-  test("expression path == HOF path on generated profiles") {
-    val docs = (0L until 120L).map { i =>
+  test("expression path == pure model on generated profiles") {
+    val generated = (0L until 120L).map { i =>
       val profile = Seq("uniform", "interleaved", "skewed", "edge")((i % 4).toInt)
       graft.gen.CorpusGen.genDoc(i, profile, 7L, 2000)
     }
+    // the blank rule is String.trim (every char <= U+0020), not Spark's
+    // trim (U+0020 only): the whitespace-only text spans go, the media
+    // span and the padded "a" stay as they are
+    val whitespace = Doc("ws", Seq(
+      Span(Span.KindText, "\t", "line://b0/l0", 0),
+      Span(Span.KindText, "\n", "line://b0/l0", 1),
+      Span(Span.KindText, "   ", "line://b0/l1", 2),
+      Span(Span.KindText, "", "line://b0/l1", 3),
+      Span(Span.KindText, " a\t", "line://b0/l2", 4),
+      Span(Span.KindMedia, "\t", "media://ws/0", 5)))
+    val docs = generated :+ whitespace
     equivalent(docs, ExtractConfig())
     equivalent(docs, ExtractConfig(
       regexRule = Some(RegexRule("([aeioubcglnt]3[:-]*\")", "3", "s")),
       pagePrefix = ""))
   }
 
-  test("RTL reorder configs run the expression hot path and match the HOF twin") {
+  test("RTL reorder configs run the expression hot path and match the pure model") {
     val resDir = Paths.get("/root/reference/tests/resources")
     assume(Files.isReadable(resDir.resolve("Lubab_alAlbab.pdf_000003.xml")))
     val parser = new OcrXmlParser
@@ -54,9 +65,9 @@ class ProcessSpansSpec extends SparkSpecBase {
       graft.gen.CorpusGen.genDoc(i, "interleaved", 11L, 1500))
     val cfg = ExtractConfig(reorderRtl = true)
     equivalent(arabic +: generated, cfg)
-    // the hot path must actually be taken (no HOF fallback): the
-    // analyzed plan contains the custom expression (the EXECUTED plan
-    // of a local Seq is pre-evaluated by ConvertToLocalRelation)
+    // the hot path must actually be taken: the analyzed plan contains
+    // the custom expression (the EXECUTED plan of a local Seq is
+    // pre-evaluated by ConvertToLocalRelation)
     import spark.implicits._
     val plan = Extraction.pipeline(Seq(arabic).toDF(), cfg)
       .queryExecution.analyzed.toString.toLowerCase
@@ -66,7 +77,6 @@ class ProcessSpansSpec extends SparkSpecBase {
 
   test("negative offsets sort in signed order (stable)") {
     import spark.implicits._
-    import graft.model.Span
     val doc = Doc("neg", Seq(
       Span("text", "c", "line://b/l0", 1),
       Span("text", "a", "line://b/l0", -2),
@@ -76,7 +86,7 @@ class ProcessSpansSpec extends SparkSpecBase {
     assert(out.spans.map(_.text) == Seq("a", "b", "z", "c"))
   }
 
-  test("expression path == HOF path on reference fixtures") {
+  test("expression path == pure model on reference fixtures") {
     val resDir = Paths.get("/root/reference/tests/resources")
     assume(Files.isReadable(resDir.resolve("500_gray00003.xml")))
     val parser = new OcrXmlParser
