@@ -30,6 +30,18 @@ object ClusterBench {
       8, 2, (a, b) => xxhash64(a, b))
   }
 
+  /** Contraction passes before the loop (alternating shuffle + local
+    * union-find); measurement knob for passes-vs-rounds tradeoff. */
+  private def ccPasses: Int =
+    sys.env.get("SPARK_GRAFT_CC_PASSES")
+      .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(2)
+
+  /** Driver-solve ceiling for the quotient graph (edges); 0 = always
+    * run the distributed loop (the measurement baseline). */
+  private def ccLocalMax: Long =
+    sys.env.get("SPARK_GRAFT_CC_LOCALMAX")
+      .flatMap(_.toLongOption).filter(_ >= 0L).getOrElse(8000000L)
+
   /** Cluster job: the full dedup DECISION pipeline — LSH banding to
     * connectivity-preserving STAR edges (O(bucket) rows per bucket;
     * all-pairs expansion explodes quadratically on the massive
@@ -38,37 +50,6 @@ object ClusterBench {
     * survivor. Iterative (label propagation with per-round
     * localCheckpoint), so its scaling behavior is measured separately
     * from the single-pass pair generation. */
-  /** Chase depth for the iterative components stage; env override is
-    * the measurement knob for the depth-vs-stage-count tradeoff. */
-  private def ccJump: Int =
-    sys.env.get("SPARK_GRAFT_CC_JUMP")
-      .flatMap(_.toIntOption).filter(_ >= 0).getOrElse(1)
-
-  /** Contraction passes before the loop (alternating shuffle + local
-    * union-find); measurement knob for passes-vs-rounds tradeoff. */
-  private def ccPasses: Int =
-    sys.env.get("SPARK_GRAFT_CC_PASSES")
-      .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(2)
-
-  /** Fixpoint-probe cadence (rounds per driver-synchronized job).
-    * Default 1: the lazy checkpoint already folds the probe into the
-    * round's one job, so batching only saves per-job scheduling while
-    * risking a full overshoot round — measured NET-NEGATIVE at 8M
-    * (cluster 4×4: 112.9 s at probe=2 vs 101.6 s at probe=1; the
-    * convergence check lands up to k−1 rounds late and one wasted
-    * round of join work outweighs the ~1 s/job sync it saves). Kept
-    * as a knob because the tradeoff flips if per-job sync cost rises
-    * (e.g. a remote cluster scheduler). */
-  private def ccProbe: Int =
-    sys.env.get("SPARK_GRAFT_CC_PROBE")
-      .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(1)
-
-  /** Driver-solve ceiling for the quotient graph (edges); 0 = always
-    * run the distributed loop (the measurement baseline). */
-  private def ccLocalMax: Long =
-    sys.env.get("SPARK_GRAFT_CC_LOCALMAX")
-      .flatMap(_.toLongOption).filter(_ >= 0L).getOrElse(8000000L)
-
   private def clusterJob(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
@@ -79,8 +60,7 @@ object ClusterBench {
       8, 2, (a, b) => xxhash64(a, b))
     graft.ops.ConnectedComponents.run(
       docs.select(col("doc_id")), "doc_id", edges, "d1", "d2",
-      jumpDepth = ccJump, contractPasses = ccPasses, probeEvery = ccProbe,
-      localSolveMax = ccLocalMax)
+      contractPasses = ccPasses, localSolveMax = ccLocalMax)
   }
 
   /** Curation job: the q64 shape at bench scale — quality gate →
@@ -104,8 +84,7 @@ object ClusterBench {
       8, 2, (a, b) => xxhash64(a, b))
     val cc = graft.ops.ConnectedComponents.run(
       quality.select(col("doc_id")), "doc_id", edges, "d1", "d2",
-      jumpDepth = ccJump, contractPasses = ccPasses, probeEvery = ccProbe,
-      localSolveMax = ccLocalMax)
+      contractPasses = ccPasses, localSolveMax = ccLocalMax)
     cc.filter(col("node") === col("lbl")) // canonical survivors
       .join(quality.select(col("doc_id").as("node"), col("n_tokens")), Seq("node"))
       .agg(count(lit(1)).as("docs_kept"),

@@ -1,14 +1,28 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types._
 
 /** Distributed connected components over an undirected edge list —
   * the step that turns near-dup candidate PAIRS (minhash-LSH banding,
   * [[graft.dedup.MinHashLsh]]) into dedup CLUSTERS with a canonical
   * survivor per component, which is what a training-data pipeline
   * actually keeps.
+  *
+  * Keys: every vertex id is encoded ONCE, on entry, to an
+  * order-preserving dense `long`, so contraction, driver solve and
+  * label loop all run on primitive longs with one union-find
+  * ([[LongUnionFind]]), and labels decode back to the caller's type on
+  * exit. Integral ids (byte/short/int/long) are cast; fixed-shape
+  * strings take the [[numericSuffixCodec]] (narrow projections); every
+  * other type is ranked (`orderBy` + `zipWithIndex` over the gated
+  * endpoints — the GraphX vertex-id design — two remap joins in, two
+  * decode joins out). Encoding order is Spark's own ordering of the
+  * type (strings by UTF-8 bytes, as Spark's `min`/`orderBy` and DuckDB
+  * compare them), so `lbl` is the component minimum in that order on
+  * every path.
   *
   * Algorithm: min-label propagation WITH POINTER JUMPING (the
   * hash-to-min family — Rastogi et al., "Finding Connected Components
@@ -27,8 +41,12 @@ import org.apache.spark.sql.graftbridge.Bridge
   * cliques with hub stars, and overlapping buckets CHAIN those stars —
   * the 2M-doc bench corpus builds components whose min-vertex
   * eccentricity exceeds 20, where plain 1-hop propagation (this
-  * operator's first version) blew through its round budget. If the
-  * graph still does not converge within `maxIter`, run() THROWS
+  * operator's first version) blew through its round budget. One jump
+  * per round (classic pointer doubling): measured at 2M docs, deeper
+  * chases converge in at most one round fewer (10 vs 11) while each
+  * extra composition adds a join stage to EVERY round — depth 1 was
+  * 23% faster end-to-end than depth 4; no chase does not converge. If
+  * the graph still does not converge within `maxIter`, run() THROWS
   * rather than silently returning split components (a dedup pipeline
   * acting on split clusters would keep duplicates).
   *
@@ -39,6 +57,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   * materialized by the fixpoint probe's count, so a round costs one
   * driver-synchronized job, not two — the driver sync is the serial
   * fraction that caps multi-executor scaling of iterative stages. The
+  * fixpoint is probed every round (probing every 2nd round measured
+  * net-negative at 8M docs on 4×4 executors: 112.9 s vs 101.6 s — the
+  * overshoot round costs more join work than the saved sync). The
   * PREVIOUS round's block is freed as soon as the next one is
   * materialized ([[Bridge.freeLocalCheckpoint]] — plain
   * `unpersist()` cannot release checkpoint storage). The returned
@@ -60,15 +81,6 @@ object ConnectedComponents {
     * @param srcCol   edge endpoint column
     * @param dstCol   edge endpoint column
     * @param maxIter  round bound; exceeding it throws (see above)
-    * @param jumpDepth pointer-jump compositions per round (reach
-    *                  l^(jumpDepth+1)). Measured at 2M docs: depth 1
-    *                  (classic pointer doubling) converges in 11
-    *                  rounds vs 10 at depth 2/4, so deeper chases buy
-    *                  at most one round while each extra composition
-    *                  adds a join stage (and its AQE re-plan) to EVERY
-    *                  round — depth 1 was 23% faster end-to-end than
-    *                  depth 4. Depth 0 (no chase) does NOT converge:
-    *                  the chase is what doubles pointers.
     * @param localContract run a partition-local union-find contraction
     *                  over the edge list before the iterative loop
     *                  (one narrow mapPartitions, no shuffle): each
@@ -84,6 +96,8 @@ object ConnectedComponents {
     *                  job), and the per-round checkpoint traffic is
     *                  what saturates shared storage bandwidth at the
     *                  larger cluster size — the pre-pass attacks both.
+    *                  `false` runs the uncontracted loop over the full
+    *                  edge table (the reference path).
     * @param contractPasses number of contraction passes (requires
     *                  `localContract`). Passes after the first
     *                  re-shuffle the star edges BY ENDPOINT
@@ -101,57 +115,33 @@ object ConnectedComponents {
     *                  is a driver-synchronized job of several joins
     *                  (measured at 8M docs: 2 passes cut the loop from
     *                  11 rounds to 5 and the 1×4 job by ~25%).
-    * @param probeEvery check the fixpoint (and materialize the pending
-    *                  round checkpoints) every k rounds instead of
-    *                  every round. Rounds between probes stay LAZY —
-    *                  each is a shallow LogicalRDD whose lineage chains
-    *                  in the RDD layer — so k rounds execute as ONE
-    *                  driver-synchronized job. Convergence is detected
-    *                  up to k−1 rounds late (the overshoot rounds are
-    *                  cheap: a converged state joined/aggregated again
-    *                  is work but no change), which trades a bounded
-    *                  slice of parallel work for fewer serial
-    *                  round-trips — the term that caps multi-executor
-    *                  scaling. maxIter still bounds and still throws.
     * @param localSolveMax when the quotient hub graph has at most this
     *                  many (symmetrized, deduped) edges, skip the
     *                  distributed loop entirely: collect it and
     *                  union-find on the driver — zero rounds, zero
     *                  per-round driver syncs, and the resulting label
-    *                  table is a LocalRelation the decode join
+    *                  table is a small RDD the decode join
     *                  broadcasts. This is how two-phase distributed CC
     *                  terminates in practice: the quotient shrinks
     *                  with the square of contraction locality, so even
     *                  petabyte corpora typically end with a
-    *                  driver-sized residual. Long-keyed quotients are
-    *                  collected PACKED (primitive long pairs — 8M
-    *                  edges ≈ 128 MB, well under any real driver
-    *                  heap); other key types collect as BOXED Rows at
-    *                  ~10× the footprint, so THEIR effective ceiling
-    *                  is localSolveMax/8 (1M edges at the default —
-    *                  string quotients above it take the distributed
-    *                  loop; spec-pinned). 0 disables (always loop). The iterative loop remains the path for
-    *                  genuinely huge quotients; measured at 8M docs
-    *                  the quotient is 2.9M edges (1.19M hubs) from
-    *                  5.1M raw star edges.
-    * @return (node, lbl) — lbl is the component's min vertex id
+    *                  driver-sized residual. The quotient is collected
+    *                  PACKED (primitive long pairs — 8M edges ≈ 128 MB,
+    *                  well under any real driver heap). 0 disables
+    *                  (always loop). The iterative loop remains the
+    *                  path for genuinely huge quotients; measured at
+    *                  8M docs the quotient is 2.9M edges (1.19M hubs)
+    *                  from 5.1M raw star edges.
+    * @return (node, lbl) in the vertex id type — lbl is the
+    *         component's min vertex id
     */
   def run(vertices: DataFrame, vCol: String, edges: DataFrame,
       srcCol: String, dstCol: String, maxIter: Int = 20,
-      jumpDepth: Int = 1, localContract: Boolean = true,
-      contractPasses: Int = 1, probeEvery: Int = 1,
+      localContract: Boolean = true, contractPasses: Int = 1,
       localSolveMax: Long = 8000000L): DataFrame = {
-    require(probeEvery >= 1, "probeEvery must be >= 1")
     require(contractPasses >= 1, "contractPasses must be >= 1")
+    val sess = vertices.sparkSession
     val vset = vertices.select(col(vCol).as("node"))
-    runInner(vset, vertices, vCol, edges, srcCol, dstCol, maxIter,
-      jumpDepth, localContract, contractPasses, probeEvery, localSolveMax)
-  }
-
-  private def runInner(vset: DataFrame, vertices: DataFrame, vCol: String,
-      edges: DataFrame, srcCol: String, dstCol: String, maxIter: Int,
-      jumpDepth: Int, localContract: Boolean,
-      contractPasses: Int, probeEvery: Int, localSolveMax: Long): DataFrame = {
     // endpoint gating on the ORIENTED edges (half the semi-join input
     // of gating the symmetrized table); the dst-then-src order leaves
     // the join output hash-partitioned by src — star hubs co-located —
@@ -161,73 +151,78 @@ object ConnectedComponents {
       .join(vset.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
       .join(vset.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
       .select(col("src"), col("dst"))
-    // ROW-WIDTH of the iterated state is what the loop pays for 10+
-    // rounds of shuffle + checkpoint write + checkpoint re-read — on a
-    // string-keyed corpus (16-char doc ids) every state row carries
-    // three UTF8 strings where three longs would do, and at the larger
-    // cluster size that traffic is exactly what saturates the shared
-    // storage/memory bandwidth (BENCH.md round 5: the 2×4→4×4 collapse).
-    // So non-integral vertex ids are remapped ONCE to dense longs whose
-    // ORDER MATCHES the original type's, the loop runs ~3× narrower,
-    // and labels decode at exit. min(id) ↔ min(node), so the min-label
-    // semantics are unchanged. Two remap strategies:
-    //  - numeric-suffix CODEC: when one aggregate over the vertex set
-    //    PROVES every id is <common-prefix><fixed-width-digits> (the
-    //    ubiquitous doc_000001234 shape), encode/decode are narrow
-    //    codegen'd projections (substring-cast / lpad-concat) — no
-    //    sort, no zipWithIndex, no remap joins, no id-map checkpoint,
-    //    no decode joins, and the contraction pre-pass runs on
-    //    primitive longs;
-    //  - otherwise the generic order-preserving distributed ranking
-    //    (sort + zipWithIndex — the GraphX vertex-id design), paying
-    //    two remap joins going in and two decode joins coming out.
+    // ---- key encoding (see the object doc) ----
+    // the iterated state pays its ROW WIDTH for 10+ rounds of shuffle +
+    // checkpoint write + re-read: three longs instead of three UTF8
+    // strings runs the loop ~3× narrower (BENCH.md round 5)
     val vtype = oriented.schema("src").dataType
-    val integral = vtype match {
-      case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType | org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
     val t0 = System.nanoTime()
-    val codec =
-      if (integral || vtype != org.apache.spark.sql.types.StringType) None
-      else numericSuffixCodec(vset)
-    val tCodec = System.nanoTime()
-    val orientedKeyed = codec match {
-      case Some((enc, _)) =>
-        oriented.select(enc(col("src")).as("src"), enc(col("dst")).as("dst"))
-      case None => oriented
+    val (keyed, decode, idMapOpt) = vtype match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        (oriented.select(col("src").cast(LongType).as("src"),
+            col("dst").cast(LongType).as("dst")),
+          (l: DataFrame) => l.select(col("node").cast(vtype).as("node"),
+            col("lbl").cast(vtype).as("lbl")),
+          None)
+      case _ =>
+        val codec = if (vtype == StringType) numericSuffixCodec(vset) else None
+        codec match {
+          case Some((enc, dec)) =>
+            (oriented.select(enc(col("src")).as("src"), enc(col("dst")).as("dst")),
+              (l: DataFrame) => l.select(dec(col("node")).as("node"),
+                dec(col("lbl")).as("lbl")),
+              None)
+          case None =>
+            val endpoints = oriented.select(col("src").as("node"))
+              .unionByName(oriented.select(col("dst").as("node"))).distinct()
+            val idRdd = endpoints.orderBy("node").rdd.zipWithIndex()
+              .map { case (r, i) => Row(r.get(0), i) }
+            // lazily checkpointed: materializes inside the first job
+            // that reads it and is freed by the caller's
+            // Bridge.freeLocalCheckpoint(result) walk, like the loop's
+            // own round checkpoints
+            val idMap = sess.createDataFrame(idRdd, StructType(Seq(
+                StructField("node", vtype, nullable = false),
+                StructField("id", LongType, nullable = false))))
+              .localCheckpoint(eager = false)
+            // dst first, src last: the output stays co-located by src
+            (oriented
+              .join(idMap.select(col("node").as("dst"), col("id").as("_did")), Seq("dst"))
+              .join(idMap.select(col("node").as("src"), col("id").as("_sid")), Seq("src"))
+              .select(col("_sid").as("src"), col("_did").as("dst")),
+              (l: DataFrame) => l
+                .join(idMap.select(col("id").as("node"), col("node").as("_nv")), Seq("node"))
+                .join(idMap.select(col("id").as("lbl"), col("node").as("_lv")), Seq("lbl"))
+                .select(col("_nv").as("node"), col("_lv").as("lbl")),
+              Some(idMap))
+        }
     }
+    val tEncode = System.nanoTime()
     // ---- graph reduction before the iterative loop ----
-    // Preferred path (QUOTIENT): one narrow partition-local union-find
-    // pass collapses each partition's edges to (member → hub) stars on
-    // the partition-local MIN, and the label loop then runs on the
-    // tiny hub QUOTIENT graph (hubs are connected iff they share a
-    // member) instead of the full edge table. The per-round
-    // full-table join + checkpoint traffic — the term that saturates
-    // shared memory bandwidth at the larger cluster size and caps
-    // N→4N scaling (BENCH.md round 5/6) — disappears: rounds touch
-    // thousands of hub rows, not millions of member rows. Labels
-    // project back through ONE join against the member→min-hub anchor
-    // map (AQE is re-enabled by then and typically broadcasts the hub
-    // labels). Correctness: every edge lives in exactly one partition,
-    // where its endpoints were unioned under one hub (intra-star
-    // connectivity); a vertex seen in k partitions bridges its k hubs
-    // (the quotient edges); and the global component min is ALWAYS a
-    // hub — it is the local min of its own local component in any
-    // partition containing it — so min-label over the quotient equals
-    // min-label over the original graph. Requires an ordering on the
-    // key type (hub = local min); unordered key types and
-    // localContract=false take the direct full-graph loop.
-    val keyedType =
-      if (codec.isDefined) org.apache.spark.sql.types.LongType else vtype
-    val quotient = localContract && orderingFor(keyedType) != null
+    // QUOTIENT: one narrow partition-local union-find pass collapses
+    // each partition's edges to (member → hub) stars on the
+    // partition-local MIN, and the label loop then runs on the tiny hub
+    // QUOTIENT graph (hubs are connected iff they share a member)
+    // instead of the full edge table. The per-round full-table join +
+    // checkpoint traffic — the term that saturates shared memory
+    // bandwidth at the larger cluster size and caps N→4N scaling
+    // (BENCH.md round 5/6) — disappears: rounds touch thousands of hub
+    // rows, not millions of member rows. Labels project back through
+    // ONE join against the member→min-hub anchor map (AQE typically
+    // broadcasts the hub labels). Correctness: every edge lives in
+    // exactly one partition, where its endpoints were unioned under one
+    // hub (intra-star connectivity); a vertex seen in k partitions
+    // bridges its k hubs (the quotient edges); and the global component
+    // min is ALWAYS a hub — it is the local min of its own local
+    // component in any partition containing it — so min-label over the
+    // quotient equals min-label over the original graph.
     val (anchorOpt, starsOpt, loopOriented) =
-      if (quotient) {
+      if (localContract) {
         // stars: lazy-checkpointed so the scan + LSH + contraction
         // upstream runs ONCE (materialized inside the loop-init job)
         // even though both `refs` consumers reference it
         val stars = Bridge.dropOriginStats(
-          contractLocal(orientedKeyed, emitBoth = false)
+          contractLocal(keyed, emitBoth = false)
             .localCheckpoint(eager = false))
         // member rows plus hub self-rows: every endpoint appears with
         // every hub it touches (a hub is its own hub)
@@ -240,65 +235,24 @@ object ConnectedComponents {
           .select(col("mh").as("src"), col("h").as("dst"))
           .filter(col("src") =!= col("dst"))
         (Some(anchor), Some(stars), hubEdges)
-      } else (None, None, orientedKeyed)
-    val symRaw = (if (quotient) {
-      var c = loopOriented.unionByName(
-        loopOriented.select(col("dst").as("src"), col("src").as("dst")))
-      // extra passes operate on the (already tiny) hub graph
-      for (_ <- 2 to contractPasses) c = contractLocal(c.repartition(col("src")))
-      c
-    } else if (localContract) {
-      // non-orderable keys: contraction still helps (arbitrary local
-      // root, both orientations emitted) but the quotient's min-hub
-      // argument does not hold, so the loop runs on the full graph
-      var c = contractLocal(orientedKeyed)
-      for (_ <- 2 to contractPasses) c = contractLocal(c.repartition(col("src")))
-      c
-    } else orientedKeyed.unionByName(
-        orientedKeyed.select(col("dst").as("src"), col("src").as("dst"))))
-      .distinct()
+      } else (None, None, keyed)
+    var symRaw = loopOriented.unionByName(
+      loopOriented.select(col("dst").as("src"), col("src").as("dst")))
+    // extra passes operate on the (already tiny) hub graph
+    if (localContract)
+      for (_ <- 2 to contractPasses) symRaw = contractLocal(symRaw.repartition(col("src")))
+    val symEdges = symRaw.distinct()
 
-    val (symEdges, idMapOpt) =
-      if (integral || codec.isDefined || quotient) (symRaw, None)
-      else {
-        val endpoints = symRaw.select(col("src").as("node")).distinct()
-        val idRdd = endpoints.orderBy("node").rdd.zipWithIndex()
-          .map { case (r, i) => org.apache.spark.sql.Row(r.get(0), i) }
-        // lazily checkpointed: materializes inside the round-1 probe
-        // job (it feeds the cached edge table) and is freed by the
-        // caller's Bridge.freeLocalCheckpoint(result) walk, exactly
-        // like the loop's own round checkpoints
-        val idMap = vertices.sparkSession.createDataFrame(idRdd,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node", vtype, nullable = false),
-            org.apache.spark.sql.types.StructField("id",
-              org.apache.spark.sql.types.LongType, nullable = false))))
-          .localCheckpoint(eager = false)
-        val remapped = symRaw
-          .join(idMap.select(col("node").as("src"), col("id").as("_sid")), Seq("src"))
-          .join(idMap.select(col("node").as("dst"), col("id").as("_did")), Seq("dst"))
-          .select(col("_sid").as("src"), col("_did").as("dst"))
-        (remapped, Some(idMap))
-      }
     // ---- driver-side solve for small quotient graphs ----
-    // type-aware ceiling: the packed primitive-long collect costs
-    // 16 B/edge, but any other key type collects BOXED Rows (strings,
-    // etc.) at ~10× that — an 8M-edge string quotient would be
-    // multiple GB of driver footprint. Non-long keyed quotients get
-    // 1/8 of the configured ceiling (1M edges at the default).
-    val effectiveSolveMax = effectiveSolveCeiling(keyedType, localSolveMax)
     val localSolved: Option[DataFrame] =
-      if (quotient && effectiveSolveMax > 0) {
+      if (localContract && localSolveMax > 0) {
         // full count first: it materializes the stars/anchor lazy
         // checkpoints COMPLETELY (a limit-collect could stop after a
         // partial partition and leave their blocks half-stored)
         val cnt = symEdges.count()
-        if (cnt <= effectiveSolveMax) {
+        if (cnt <= localSolveMax) {
           val tCnt = System.nanoTime()
-          val pairs = driverSolve(symEdges, orderingFor(keyedType))
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node", keyedType, nullable = false),
-            org.apache.spark.sql.types.StructField("lbl", keyedType, nullable = false)))
+          val pairs = driverSolve(symEdges)
           // hand the label table back as a small RDD, not a
           // LocalRelation: Row building and InternalRow conversion for
           // ~10^6 labels is single-threaded driver time (a pure
@@ -307,178 +261,142 @@ object ConnectedComponents {
           // broadcast-converts the decode join from the RUNTIME
           // shuffle size of this small side — no driver-side relation
           // materialization at all.
-          val sess = vertices.sparkSession
           val slices = math.max(1, math.min(16, pairs.length / 100000))
           val rowRdd = sess.sparkContext.parallelize(pairs.toSeq, slices)
-            .map { case (v, m) => org.apache.spark.sql.Row(v, m) }
-          def ms0(a: Long, b: Long): Long = (b - a) / 1000000L
+            .map { case (v, m) => Row(v, m) }
           System.err.println(s"[graft.cc] localSolve=true quotientEdges=$cnt " +
             s"labels=${pairs.length} contractPasses=$contractPasses " +
-            s"codecMs=${ms0(t0, tCodec)} setupMs=${ms0(tCodec, tCnt)} " +
-            s"solveMs=${ms0(tCnt, System.nanoTime())}")
-          Some(sess.createDataFrame(rowRdd, schema))
+            s"encodeMs=${ms(t0, tEncode)} setupMs=${ms(tEncode, tCnt)} " +
+            s"solveMs=${ms(tCnt, System.nanoTime())}")
+          Some(sess.createDataFrame(rowRdd, StructType(Seq(
+            StructField("node", LongType, nullable = false),
+            StructField("lbl", LongType, nullable = false)))))
         } else None
       } else None
 
-    val labels: DataFrame = if (localSolved.isDefined) localSolved.get else {
-    // the loop re-plans a new QueryExecution per round; AQE turns each
-    // round's 2-3 exchanges into SEQUENTIAL query-stage
-    // materializations with a driver sync between every one — pure
-    // serial overhead when the loop's shuffle partitioning is already
-    // explicitly sized (labels are narrow and uniform; nothing here
-    // benefits from runtime re-planning). Disabled for the LOOP only —
-    // the setup (gating semi-joins, contraction, quotient build,
-    // count) and the decode joins after it are ordinary one-shot
-    // plans that DO benefit from AQE's coalescing and runtime
-    // broadcast decisions (measured ~35% off q62's setup at sf0.1) —
-    // and the caller's setting is restored on every exit path.
-    val sess = vertices.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqePrev = sess.conf.getOption(aqeKey)
-    sess.conf.set(aqeKey, "false")
-    try {
-    val sym = symEdges
-      // co-locate the STATIC side of the per-round neighbor join ONCE:
-      // distinct() leaves sym hash-partitioned by (src, dst), which the
-      // join on src cannot reuse — without this, every round re-shuffles
-      // the whole edge table (the largest per-round input) and pays that
-      // exchange's stage barrier. The cached InMemoryRelation preserves
-      // hashpartitioning(src), so each round only exchanges the labels.
-      .repartition(col("src"))
-      .persist() // cache-managed: the final result's lineage is
-                 // checkpoint-backed, so this is safe to free below
-    // only vertices that touch an edge can ever change label — iterate
-    // over THAT subgraph and union everyone else back as singletons at
-    // the end. In a near-dup corpus the candidate-pair endpoints are a
-    // tiny fraction of the documents, so the per-round state shrinks
-    // from |V| to |endpoints|.
-    // every checkpoint is rebuilt WITHOUT origin statistics
-    // (Bridge.dropOriginStats): the round plan self-joins the previous
-    // checkpoint several times, and Catalyst's join size estimate
-    // multiplies child sizes — with propagated stats the estimate
-    // compounds exponentially across rounds until the driver spends
-    // minutes in BigInteger math during planning (measured hang at 2M
-    // docs with the l³ jump below)
-    var prevCheckpoint = sym.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-      .withColumn("prev", col("node"))
-      .localCheckpoint()
-    var state = Bridge.dropOriginStats(prevCheckpoint)
-    var labels = state.select(col("node"), col("lbl"))
+    val labels: DataFrame = localSolved.getOrElse {
+      // the loop re-plans a new QueryExecution per round; AQE turns each
+      // round's 2-3 exchanges into SEQUENTIAL query-stage
+      // materializations with a driver sync between every one — pure
+      // serial overhead when the loop's shuffle partitioning is already
+      // explicitly sized (labels are narrow and uniform; nothing here
+      // benefits from runtime re-planning). So the LOOP runs on a clone
+      // of the caller's session with AQE off (same SparkContext, cache
+      // and SQL settings, its own SQLConf): the caller's session is
+      // never touched, so a concurrent query on it keeps AQE. The setup
+      // (gating semi-joins, contraction, quotient build, count) and the
+      // decode joins after the loop are ordinary one-shot plans on the
+      // caller's session that DO benefit from AQE's coalescing and
+      // runtime broadcast decisions (measured ~35% off q62's setup at
+      // sf0.1).
+      val loopSess = Bridge.cloneSession(sess)
+      loopSess.conf.set("spark.sql.adaptive.enabled", "false")
+      val sym = Bridge.rebind(symEdges, loopSess)
+        // co-locate the STATIC side of the per-round neighbor join ONCE:
+        // distinct() leaves sym hash-partitioned by (src, dst), which the
+        // join on src cannot reuse — without this, every round re-shuffles
+        // the whole edge table (the largest per-round input) and pays that
+        // exchange's stage barrier. The cached InMemoryRelation preserves
+        // hashpartitioning(src), so each round only exchanges the labels.
+        .repartition(col("src"))
+        .persist() // cache-managed: the final result's lineage is
+                   // checkpoint-backed, so this is safe to free below
+      // only vertices that touch an edge can ever change label — iterate
+      // over THAT subgraph and union everyone else back as singletons at
+      // the end. In a near-dup corpus the candidate-pair endpoints are a
+      // tiny fraction of the documents, so the per-round state shrinks
+      // from |V| to |endpoints|.
+      // every checkpoint is rebuilt WITHOUT origin statistics
+      // (Bridge.dropOriginStats): the round plan self-joins the previous
+      // checkpoint several times, and Catalyst's join size estimate
+      // multiplies child sizes — with propagated stats the estimate
+      // compounds exponentially across rounds until the driver spends
+      // minutes in BigInteger math during planning (measured hang at 2M
+      // docs with a second pointer-jump join)
+      var prevCheckpoint = sym.select(col("src").as("node")).distinct()
+        .withColumn("lbl", col("node"))
+        .withColumn("prev", col("node"))
+        .localCheckpoint()
+      var state = Bridge.dropOriginStats(prevCheckpoint)
+      var loopLabels = state.select(col("node"), col("lbl"))
 
-    val tInit = System.nanoTime() // init checkpoint materialized setup
-    var iter = 0
-    var converged = false
-    // rounds whose lazy checkpoints have not been materialized yet
-    // (probeEvery > 1); freed wholesale at the next probe, once the
-    // newest round's blocks are stored and its lineage no longer needs
-    // them
-    var pendingFree: List[DataFrame] = Nil
-    while (iter < maxIter && !converged) {
-      val viaNeighbors = sym
-        .join(labels, sym("src") === labels("node"))
-        .select(col("dst").as("node"), col("lbl"), lit(0).as("own"))
-      // pointer jump: my label's label, composed `jumpDepth` times.
-      // Each composition multiplies per-round reach (l², l³, …):
-      // convergence drops from log₂ to ~log_(depth+1) of the
-      // eccentricity. The joins are parallel work over the SMALL label
-      // table; what they buy is FEWER ROUNDS, and each round carries
-      // fixed driver-synchronized cost (job scheduling, checkpoint
-      // materialization, the fixpoint probe) — the serial fraction
-      // that caps multi-executor scaling of the iterative stage.
-      // Label chasing is monotone (a vertex's label never exceeds its
-      // id, so l(l(x)) ≤ l(x)) — only the DEEPEST composition needs to
-      // enter the aggregate; the intermediates are join scaffolding.
-      var deepJump = labels.select(col("node"), col("lbl"))
-      for (d <- 1 to jumpDepth) {
-        val m = labels.select(col("node").as(s"_j$d"), col("lbl").as(s"_l$d"))
-        deepJump = deepJump
-          .join(m, deepJump("lbl") === col(s"_j$d"))
-          .select(deepJump("node"), col(s"_l$d").as("lbl"))
+      val tInit = System.nanoTime() // init checkpoint materialized setup
+      var iter = 0
+      var converged = false
+      while (iter < maxIter && !converged) {
+        val viaNeighbors = sym
+          .join(loopLabels, sym("src") === loopLabels("node"))
+          .select(col("dst").as("node"), col("lbl"), lit(0).as("own"))
+        // pointer jump: my label's label. Label chasing is monotone (a
+        // vertex's label never exceeds its id, so l(l(x)) ≤ l(x)).
+        val jump = loopLabels.select(col("node"), col("lbl"))
+        val viaJump = jump
+          .join(loopLabels.select(col("node").as("_j"), col("lbl").as("_l")),
+            jump("lbl") === col("_j"))
+          .select(jump("node"), col("_l").as("lbl"), lit(0).as("own"))
+        // PUSH (hash-to-min's second half): pulling down the pointer
+        // chain alone leaves "local minimum" basins that a component min
+        // can only cross via neighbor edges at ONE hop per round —
+        // measured 17 rounds at 2M docs with pull-only, any jump depth.
+        // Each vertex therefore also SENDS its improved label UP to the
+        // vertex it pointed at last round, and the chase spreads it back
+        // down — the two-way flow that makes hash-to-min logarithmic
+        // (Rastogi et al. §3). The checkpoint already carries last
+        // round's label as `prev`, so the push is a projection of state
+        // the round already has: zero joins, just |V| extra rows riding
+        // the existing aggregate shuffle.
+        val viaPush = state
+          .select(col("prev").as("node"), col("lbl"), lit(0).as("own"))
+        // the vertex's previous label rides along as `own=1`, so the SAME
+        // aggregate yields both the new label and the fixpoint signal —
+        // no extra probe join/shuffle per round
+        val next = loopLabels.select(col("node"), col("lbl"), lit(1).as("own"))
+          .unionByName(viaNeighbors)
+          .unionByName(viaJump)
+          .unionByName(viaPush)
+          .groupBy(col("node"))
+          .agg(min(col("lbl")).as("lbl"),
+            min(when(col("own") === 1, col("lbl"))).as("prev"))
+          // LAZY checkpoint: the fixpoint probe below is the materializing
+          // action, so each round schedules ONE driver-synchronized job
+          // instead of two (eager materialization + probe). The probe must
+          // be a full count — isEmpty is a take(1) that can stop after one
+          // partition and would leave the checkpoint partially stored.
+          .localCheckpoint(eager = false)
+        val nextClean = Bridge.dropOriginStats(next)
+        iter += 1
+        converged = nextClean.filter(col("lbl") =!= col("prev")).count() == 0L
+        // only after the probe has stored this round's blocks is the
+        // previous round's checkpoint safe to drop
+        Bridge.freeLocalCheckpoint(prevCheckpoint)
+        prevCheckpoint = next
+        state = nextClean
+        loopLabels = nextClean.select(col("node"), col("lbl"))
       }
-      // PUSH (hash-to-min's second half): pulling down the pointer
-      // chain alone leaves "local minimum" basins that a component min
-      // can only cross via neighbor edges at ONE hop per round —
-      // measured 17 rounds at 2M docs with pull-only, any jump depth.
-      // Each vertex therefore also SENDS its improved label UP to the
-      // vertex it pointed at last round, and the chase spreads it back
-      // down — the two-way flow that makes hash-to-min logarithmic
-      // (Rastogi et al. §3). The checkpoint already carries last
-      // round's label as `prev`, so the push is a projection of state
-      // the round already has: zero joins, just |V| extra rows riding
-      // the existing aggregate shuffle.
-      val viaPush = state
-        .select(col("prev").as("node"), col("lbl"), lit(0).as("own"))
-      // the vertex's previous label rides along as `own=1`, so the SAME
-      // aggregate yields both the new label and the fixpoint signal —
-      // no extra probe join/shuffle per round
-      val next = labels.select(col("node"), col("lbl"), lit(1).as("own"))
-        .unionByName(viaNeighbors)
-        .unionByName(deepJump.withColumn("own", lit(0)))
-        .unionByName(viaPush)
-        .groupBy(col("node"))
-        .agg(min(col("lbl")).as("lbl"),
-          min(when(col("own") === 1, col("lbl"))).as("prev"))
-        // LAZY checkpoint: the fixpoint probe below is the materializing
-        // action, so each round schedules ONE driver-synchronized job
-        // instead of two (eager materialization + probe). The probe must
-        // be a full count — isEmpty is a take(1) that can stop after one
-        // partition and would leave the checkpoint partially stored.
-        .localCheckpoint(eager = false)
-      val nextClean = Bridge.dropOriginStats(next)
-      iter += 1
-      if (probeEvery <= 1 || iter % probeEvery == 0 || iter == maxIter) {
-        // the probe is the materializing action for EVERY round since
-        // the last probe (their RDD lineages chain; one job computes
-        // and stores them all). Only after it returns are the older
-        // rounds' blocks safe to drop.
-        converged =
-          nextClean.filter(col("lbl") =!= col("prev")).count() == 0L
-        (prevCheckpoint :: pendingFree).foreach(Bridge.freeLocalCheckpoint)
-        pendingFree = Nil
-      } else {
-        pendingFree = prevCheckpoint :: pendingFree
+      sym.unpersist(blocking = false)
+      // phase split for scaling diagnostics (rounds are the serial axis
+      // of this operator): key encoding / setup (scan + LSH +
+      // contraction + edge cache + init checkpoint, all inside the
+      // eager init materialization) / the label loop itself
+      System.err.println(s"[graft.cc] converged=$converged rounds=$iter " +
+        s"contractPasses=$contractPasses encodeMs=${ms(t0, tEncode)} " +
+        s"setupMs=${ms(tEncode, tInit)} loopMs=${ms(tInit, System.nanoTime())}")
+      if (!converged) {
+        // the final round's block and the setup checkpoints would
+        // otherwise outlive the failure (callers that swallow the throw —
+        // best-of-N benches — would leak MEMORY_AND_DISK blocks per
+        // failed attempt)
+        (Seq(prevCheckpoint) ++ idMapOpt ++ anchorOpt ++ starsOpt)
+          .foreach(Bridge.freeLocalCheckpoint)
+        throw new IllegalStateException(
+          s"connected components did not converge within $maxIter rounds — " +
+            "the graph has a component whose min-vertex eccentricity exceeds " +
+            "the bound; raise maxIter (silently returning split clusters " +
+            "would make a dedup pipeline keep duplicates)")
       }
-      prevCheckpoint = next
-      state = nextClean
-      labels = nextClean.select(col("node"), col("lbl"))
-    }
-    sym.unpersist(blocking = false)
-    // rounds are the serial axis of this operator — surface the count
-    // for scaling diagnostics (stderr, not the result)
-    // phase split for scaling diagnostics: codec probe / setup (scan +
-    // LSH + contraction + edge cache + init checkpoint, all inside the
-    // eager init materialization) / the label loop itself
-    val tLoop = System.nanoTime()
-    def ms(a: Long, b: Long): Long = (b - a) / 1000000L
-    System.err.println(s"[graft.cc] converged=$converged rounds=$iter " +
-      s"jumpDepth=$jumpDepth contractPasses=$contractPasses probeEvery=$probeEvery " +
-      s"codecMs=${ms(t0, tCodec)} setupMs=${ms(tCodec, tInit)} loopMs=${ms(tInit, tLoop)}")
-    if (!converged) {
-      // the final round's block (and the id-map checkpoint) would
-      // otherwise outlive the failure (callers that swallow the throw —
-      // best-of-N benches — would leak MEMORY_AND_DISK blocks per
-      // failed attempt). pendingFree is empty here (the loop always
-      // probes on its last round), listed defensively.
-      (prevCheckpoint :: pendingFree).foreach(Bridge.freeLocalCheckpoint)
-      idMapOpt.foreach(Bridge.freeLocalCheckpoint)
-      anchorOpt.foreach(Bridge.freeLocalCheckpoint)
-      // the stars lazy checkpoint too: without this, each failed
-      // attempt in a best-of-N bench leaks its MEMORY_AND_DISK blocks
-      starsOpt.foreach(Bridge.freeLocalCheckpoint)
-      throw new IllegalStateException(
-        s"connected components did not converge within $maxIter rounds — " +
-          "the graph has a component whose min-vertex eccentricity exceeds " +
-          "the bound; raise maxIter (silently returning split clusters " +
-          "would make a dedup pipeline keep duplicates)")
-    }
-    labels
-    } finally {
-      aqePrev match {
-        case Some(v) => sess.conf.set(aqeKey, v)
-        case None => sess.conf.unset(aqeKey)
-      }
-    }
+      // the labels go back to the caller's session, so the decode
+      // below plans with the caller's settings
+      Bridge.rebind(loopLabels, sess)
     }
     // the stars checkpoint only feeds the anchor/hub-edge derivation,
     // both materialized (anchor into its own checkpoint) by the local
@@ -493,19 +411,7 @@ object ConnectedComponents {
           .select(col("v").as("node"), coalesce(col("lbl"), col("mh")).as("lbl"))
       case None => labels
     }
-    // decode the dense long ids back to the caller's vertex values —
-    // a narrow projection on the codec path, two joins over the same
-    // checkpointed id map on the ranking path
-    val labelsOut = (codec, idMapOpt) match {
-      case (Some((_, dec)), _) =>
-        fullLabels.select(dec(col("node")).as("node"), dec(col("lbl")).as("lbl"))
-      case (None, None) => fullLabels
-      case (_, Some(idMap)) =>
-        fullLabels
-          .join(idMap.select(col("id").as("node"), col("node").as("_nv")), Seq("node"))
-          .join(idMap.select(col("id").as("lbl"), col("node").as("_lv")), Seq("lbl"))
-          .select(col("_nv").as("node"), col("_lv").as("lbl"))
-    }
+    val labelsOut = decode(fullLabels)
     // vertices outside every edge are their own components
     val untouched = vertices.select(col(vCol).as("node"))
       .join(labelsOut.select(col("node")), Seq("node"), "left_anti")
@@ -513,16 +419,7 @@ object ConnectedComponents {
     labelsOut.unionByName(untouched)
   }
 
-  /** The driver-solve ceiling actually applied for a keyed type:
-    * long-keyed quotients collect PACKED (16 B/edge) and get the full
-    * configured ceiling; every other type collects boxed Rows at ~10×
-    * the footprint and gets 1/8 of it (so sub-8 configured values
-    * disable the solve entirely for boxed keys). */
-  private[graft] def effectiveSolveCeiling(
-      keyedType: org.apache.spark.sql.types.DataType,
-      localSolveMax: Long): Long =
-    if (keyedType == org.apache.spark.sql.types.LongType) localSolveMax
-    else localSolveMax / 8
+  private def ms(a: Long, b: Long): Long = (b - a) / 1000000L
 
   /** Order-preserving string↔long codec for vertex ids of the shape
     * `<common-prefix><fixed-width-digits>` — proven, not assumed: one
@@ -555,168 +452,47 @@ object ConnectedComponents {
     if (width < 1 || width > 18) return None
     Some((
       (c: org.apache.spark.sql.Column) =>
-        substring(c, p0.length + 1, width).cast(org.apache.spark.sql.types.LongType),
+        substring(c, p0.length + 1, width).cast(LongType),
       (c: org.apache.spark.sql.Column) =>
-        concat(lit(p0), lpad(c.cast(org.apache.spark.sql.types.StringType),
-          width, "0"))))
+        concat(lit(p0), lpad(c.cast(StringType), width, "0"))))
   }
 
-  /** One driver pass of union-find over a collected edge table
+  /** One driver pass of union-find over a collected long edge table
     * (quotient graphs under `localSolveMax`); returns (vertex,
     * componentMin) for every NON-ROOT vertex — roots label themselves,
-    * which the decode join's coalesce supplies without a row. `ord`
-    * must be non-null (quotient paths guarantee an ordered key). */
-  private[graft] def driverSolve(e: DataFrame, ord: Ordering[Any])
-      : Array[(Any, Any)] = {
-    val isLong = e.schema.head.dataType == org.apache.spark.sql.types.LongType
-    if (isLong) {
-      // packed collect: one primitive long array per partition instead
-      // of millions of boxed Rows — the transient driver footprint is
-      // 16 bytes/edge, not ~10× that
-      val packed = e.rdd.mapPartitions { it =>
-        val buf = new scala.collection.mutable.ArrayBuilder.ofLong
-        it.foreach { r =>
-          if (!r.isNullAt(0) && !r.isNullAt(1)) {
-            buf += r.getLong(0); buf += r.getLong(1)
-          }
-        }
-        Iterator(buf.result())
-      }.collect()
-      val uf = new LongUnionFind(1 << 12)
-      packed.foreach { arr =>
-        var i = 0
-        while (i < arr.length) { uf.union(arr(i), arr(i + 1)); i += 2 }
-      }
-      uf.starEdges.map { case (v, m) => (v: Any, m: Any) }.toArray
-    } else {
-      val rows = e.collect()
-      val parent = new java.util.HashMap[Any, Any]()
-      def find(x0: Any): Any = {
-        var x = x0
-        var p = parent.get(x)
-        if (p == null) { parent.put(x, x); return x }
-        while (p != x) {
-          val gp = parent.get(p)
-          parent.put(x, gp)
-          x = gp
-          p = parent.get(x)
-        }
-        x
-      }
-      rows.foreach { r =>
-        if (!r.isNullAt(0) && !r.isNullAt(1)) {
-          val ru = find(r.get(0))
-          val rv = find(r.get(1))
-          if (ru != rv) parent.put(ru, rv)
-        }
-      }
-      import scala.jdk.CollectionConverters._
-      val keys = parent.keySet().asScala.toArray
-      val repr = new java.util.HashMap[Any, Any]()
-      keys.foreach { v =>
-        val root = find(v)
-        val cur = repr.get(root)
-        if (cur == null || ord.lt(v, cur)) repr.put(root, v)
-      }
-      keys.iterator.map(v => (v, repr.get(find(v))))
-        .filter { case (v, m) => v != m }.toArray
-    }
-  }
-
-  /** Partition-local union-find contraction (the "local aggregation"
-    * trick of the MapReduce-CC literature): within each partition,
-    * union every edge's endpoints, then emit star edges from every
-    * member to its local component representative — BOTH orientations,
-    * so the caller needs no symmetrizing self-union. Narrow (zero
-    * shuffle), one pass, memory bounded by the partition's distinct
-    * endpoint count. The representative is the component's MIN member
-    * when the id type is orderable (accelerates the global min-label
-    * loop); for exotic types it falls back to an arbitrary root, which
-    * is still CORRECT — the loop computes the true minimum either way,
-    * the choice only affects convergence speed. Output size is at most
-    * 2·(distinct endpoints per partition), ≤ the symmetrized input and
-    * usually far smaller on bucket-clustered candidate graphs. */
-  /** Ordering for the vertex-id types the min-hub contraction can
-    * serve; null for types where only an arbitrary-root contraction
-    * (both orientations, full loop downstream) is available. */
-  private[graft] def orderingFor(
-      dt: org.apache.spark.sql.types.DataType): Ordering[Any] = dt match {
-    case org.apache.spark.sql.types.StringType =>
-      Ordering.by((a: Any) => a.asInstanceOf[String])
-    case org.apache.spark.sql.types.LongType =>
-      Ordering.by((a: Any) => a.asInstanceOf[Long])
-    case org.apache.spark.sql.types.IntegerType =>
-      Ordering.by((a: Any) => a.asInstanceOf[Int])
-    case org.apache.spark.sql.types.ShortType =>
-      Ordering.by((a: Any) => a.asInstanceOf[Short])
-    case _ => null
-  }
-
-  private[graft] def contractLocal(e: DataFrame,
-      emitBoth: Boolean = true): DataFrame = {
-    if (e.schema.head.dataType == org.apache.spark.sql.types.LongType &&
-        e.schema(1).dataType == org.apache.spark.sql.types.LongType)
-      return contractLocalLong(e, emitBoth)
-    val spark = e.sparkSession
-    val schema = e.schema
-    val ord: Ordering[Any] = orderingFor(e.schema.head.dataType)
-    // single-orientation (member → hub) output is only meaningful when
-    // the hub is the provable local minimum
-    require(emitBoth || ord != null,
-      "oriented star output requires an ordered vertex type")
-    val rows = e.rdd.mapPartitions { it =>
-      val parent = new java.util.HashMap[Any, Any]()
-      // find with path halving; roots map to themselves (every vertex
-      // is inserted on first sight, so lookups of a present key never
-      // return null)
-      def find(x0: Any): Any = {
-        var x = x0
-        var p = parent.get(x)
-        if (p == null) { parent.put(x, x); return x }
-        while (p != x) {
-          val gp = parent.get(p)
-          parent.put(x, gp)
-          x = gp
-          p = parent.get(x)
-        }
-        x
-      }
+    * which the decode join's coalesce supplies without a row. */
+  private[graft] def driverSolve(e: DataFrame): Array[(Long, Long)] = {
+    // packed collect: one primitive long array per partition instead
+    // of millions of boxed Rows — the transient driver footprint is
+    // 16 bytes/edge
+    val packed = e.rdd.mapPartitions { it =>
+      val buf = new scala.collection.mutable.ArrayBuilder.ofLong
       it.foreach { r =>
         if (!r.isNullAt(0) && !r.isNullAt(1)) {
-          val ru = find(r.get(0))
-          val rv = find(r.get(1))
-          if (ru != rv) parent.put(ru, rv)
+          buf += r.getLong(0); buf += r.getLong(1)
         }
       }
-      import scala.jdk.CollectionConverters._
-      val keys = parent.keySet().asScala.toArray
-      val repr = new java.util.HashMap[Any, Any]()
-      keys.foreach { v =>
-        val root = find(v)
-        if (ord != null) {
-          val cur = repr.get(root)
-          if (cur == null || ord.lt(v, cur)) repr.put(root, v)
-        } else repr.put(root, root)
-      }
-      keys.iterator.flatMap { v =>
-        val m = repr.get(find(v))
-        if (m == v) Iterator.empty
-        else if (emitBoth) Iterator(org.apache.spark.sql.Row(v, m),
-          org.apache.spark.sql.Row(m, v))
-        else Iterator(org.apache.spark.sql.Row(v, m))
-      }
+      Iterator(buf.result())
+    }.collect()
+    val uf = new LongUnionFind(1 << 12)
+    packed.foreach { arr =>
+      var i = 0
+      while (i < arr.length) { uf.union(arr(i), arr(i + 1)); i += 2 }
     }
-    spark.createDataFrame(rows, schema)
+    uf.starEdges.toArray
   }
 
-  /** [[contractLocal]] specialized to long endpoints (the dense-id /
-    * codec path every large corpus takes): an open-addressing
-    * primitive long→long parent table instead of a boxed
-    * HashMap[Any,Any] — no boxing, no equals/hashCode dispatch, ~3×
-    * less memory churn on the 10^7-edge partitions the 8M-doc bench
-    * feeds it. Same algorithm: union every edge, emit both
-    * orientations of member→local-min star edges. */
-  private[graft] def contractLocalLong(e: DataFrame,
+  /** Partition-local union-find contraction over long endpoints (the
+    * "local aggregation" trick of the MapReduce-CC literature): within
+    * each partition, union every edge's endpoints, then emit star edges
+    * from every member to its local component MINIMUM — BOTH
+    * orientations unless `emitBoth` is false, so the caller needs no
+    * symmetrizing self-union. Narrow (zero shuffle), one pass, memory
+    * bounded by the partition's distinct endpoint count. Output size is
+    * at most 2·(distinct endpoints per partition), ≤ the symmetrized
+    * input and usually far smaller on bucket-clustered candidate
+    * graphs. */
+  private[graft] def contractLocal(e: DataFrame,
       emitBoth: Boolean = true): DataFrame = {
     val spark = e.sparkSession
     val schema = e.schema
@@ -727,11 +503,9 @@ object ConnectedComponents {
           uf.union(r.getLong(0), r.getLong(1))
       }
       if (emitBoth)
-        uf.starEdges.flatMap { case (v, m) =>
-          Iterator(org.apache.spark.sql.Row(v, m), org.apache.spark.sql.Row(m, v))
-        }
+        uf.starEdges.flatMap { case (v, m) => Iterator(Row(v, m), Row(m, v)) }
       else
-        uf.starEdges.map { case (v, m) => org.apache.spark.sql.Row(v, m) }
+        uf.starEdges.map { case (v, m) => Row(v, m) }
     }
     spark.createDataFrame(rows, schema)
   }
@@ -743,8 +517,7 @@ object ConnectedComponents {
   private[graft] final class LongUnionFind(initialCapacity: Int) {
     // keys: vertex ids; vals: parent pointers. EMPTY slots hold the
     // sentinel key Long.MinValue — a legal vertex id would collide,
-    // so union() rejects it (no real corpus keys on Long.MinValue;
-    // the generic boxed path remains for exotica).
+    // so union() rejects it (no real corpus keys on Long.MinValue).
     private final val Empty = Long.MinValue
     private var cap = Integer.highestOneBit(math.max(initialCapacity, 16)) * 2
     private var keys = Array.fill[Long](cap)(Empty)
@@ -798,7 +571,8 @@ object ConnectedComponents {
       require(a != Empty && b != Empty,
         "Long.MinValue vertex id collides with the open-addressing " +
           "sentinel — run ConnectedComponents with localContract=false " +
-          "(boxed path) for graphs that can carry this id")
+          "(the uncontracted loop, no union-find) for graphs that can " +
+          "carry this id")
       val ra = find(a)
       val rb = find(b)
       // min-root union: the surviving root IS the component minimum,

@@ -131,9 +131,11 @@ object ProcessSpans {
         val kind = row.getUTF8String(0)
         val isText = kind != null && ProcessSpans.isTextKind(kind)
         val raw = if (row.isNullAt(1)) null else row.getUTF8String(1)
-        var text = if (raw == null) "" else raw.toString
+        // null text stays null: a null-text text span is blank (dropped,
+        // no replacement stats), a null-text media span passes as is
+        var text = if (raw == null) null else raw.toString
         val before = text
-        if (isText) {
+        if (isText && text != null) {
           val dictKeys = cfg.dictKeys
           val dictVals = cfg.dictVals
           var di = 0
@@ -156,7 +158,7 @@ object ProcessSpans {
             }
           }
         }
-        val keep = !isText || text.trim.nonEmpty
+        val keep = !isText || (text != null && text.trim.nonEmpty)
         if (keep) {
           kinds(m) = kind
           texts(m) = text
@@ -279,7 +281,8 @@ object ProcessSpans {
     while (o < m) {
       val k = sorted(o)
       val outText = // reuse the input buffer when the text is unmodified
-        if (rawTexts(k) != null) rawTexts(k) else UTF8String.fromString(texts(k))
+        if (rawTexts(k) != null) rawTexts(k)
+        else UTF8String.fromString(texts(k)) // null for a null text
       outSpans(o) = new GenericInternalRow(Array[Any](
         kinds(k), outText, refs(k), offsets(k)))
       o += 1

@@ -131,11 +131,12 @@ object Extraction {
   /** A1/A2 replacement statistics of one document's raw spans — the
     * pure twin of the stats the ProcessSpans expression computes
     * inline (lib/ocr_step.py:255-268; each key counts once per span
-    * in which it occurred, regex keys are `match=>replacement`). */
+    * in which it occurred, regex keys are `match=>replacement`; a
+    * null-text span counts nothing). */
   def replStatsOf(spans: Seq[Span], cfg: ExtractConfig): Map[String, Int] = {
     val stats = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     spans.foreach { s =>
-      if (s.kind == Span.KindText) {
+      if (s.kind == Span.KindText && s.text != null) {
         val (t1, hits) = TextRules.replaceChars(s.text, cfg.replaceDict)
         hits.foreach(k => stats.update(k, stats.getOrElse(k, 0) + 1))
         cfg.regexRule.foreach { r =>
@@ -150,11 +151,12 @@ object Extraction {
   /** Span clean-up of one document, the pure model of the chain
     * [[graft.sql.ProcessSpans]] runs inline: on text spans C1 char
     * replace → C2 regex replace, then drop text spans whose text is
-    * blank by `String.trim` (F6, lib/ocr_step.py:581-602), then a
+    * null or blank by `String.trim` (F6, lib/ocr_step.py:581-602), then a
     * stable re-sort by offset (S8). Media spans pass untouched. */
   def cleanSpans(spans: Seq[Span], cfg: ExtractConfig): Seq[Span] =
     spans.flatMap { s =>
       if (s.kind != Span.KindText) Some(s)
+      else if (s.text == null) None
       else {
         val t1 = TextRules.replaceChars(s.text, cfg.replaceDict)._1
         val t2 = cfg.regexRule.fold(t1)(r =>

@@ -60,6 +60,24 @@ object Bridge {
       case _ => df
     }
 
+  /** A clone of `s` (`cloneSession()` is `private[sql]`): same
+    * SparkContext and shared state (cache, external catalog), and a
+    * COPY of its session state, SQL settings included, so a
+    * `conf.set` on the clone never reaches `s` — an operator can run
+    * one phase under different settings without changing the caller's
+    * session under a concurrent query. */
+  def cloneSession(s: SparkSession): SparkSession =
+    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
+  /** `df`'s analyzed plan as a DataFrame of `session` (which must share
+    * `df`'s SparkContext, e.g. a [[cloneSession]]): its actions plan
+    * and run under `session`'s settings. */
+  def rebind(df: org.apache.spark.sql.DataFrame,
+      session: SparkSession): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      session.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      df.queryExecution.analyzed)
+
   /** A sibling SparkSession on the same SparkContext with the given
     * extensions applied — Spark only applies extensions at session
     * construction, and `getOrCreate` returns the existing session, so

@@ -186,6 +186,104 @@ class OpsJoinSpec extends SparkSpecBase {
       g(10) -> g(10), g(100) -> g(100)))
   }
 
+  test("connectedComponents: string ids label by UTF-8 byte order on every path") {
+    import spark.implicits._
+    // pure-alpha ids (no codec, so the rank encoding): U+FFFF (EF BF BF)
+    // sorts BEFORE U+10000 (F0 90 80 80) by UTF-8 bytes, as Spark's
+    // min/orderBy and DuckDB compare strings, but AFTER it by Java's
+    // UTF-16 compareTo (surrogate \uD800 < \uFFFF)
+    val (a, b) = ("\uFFFF", "\uD800\uDC00")
+    val vertices = Seq(a, b).toDF("v")
+    val edges = Seq(b -> a).toDF("s", "d")
+    for ((contract, solve) <- Seq((true, 8000000L), (false, 8000000L), (true, 0L))) {
+      val got = ConnectedComponents.run(vertices, "v", edges, "s", "d",
+          localContract = contract, localSolveMax = solve)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(got == Map(a -> a, b -> a),
+        s"localContract=$contract localSolveMax=$solve")
+    }
+  }
+
+  test("connectedComponents: Int ids keep IntegerType and label by component minimum") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.IntegerType
+    val vertices = (1 to 10).toDF("v")
+    val edges = Seq((5, 4), (4, 3), (3, 2), (9, 7), (8, 9)).toDF("a", "b")
+    for ((contract, solve) <- Seq((true, 8000000L), (false, 8000000L), (true, 0L))) {
+      val out = ConnectedComponents.run(vertices, "v", edges, "a", "b",
+        localContract = contract, localSolveMax = solve)
+      assert(out.schema.map(_.dataType) == Seq(IntegerType, IntegerType))
+      val got = out.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
+      assert(got == Map(1 -> 1, 2 -> 2, 3 -> 2, 4 -> 2, 5 -> 2,
+        6 -> 6, 7 -> 7, 8 -> 7, 9 -> 7, 10 -> 10),
+        s"localContract=$contract localSolveMax=$solve")
+    }
+  }
+
+  // maxIter = 0 proves the path taken: the driver solve ignores it,
+  // the label loop would throw
+  private val alphaChain = Seq("va" -> "vb", "vb" -> "vc", "vc" -> "vd")
+
+  test("connectedComponents: a string quotient driver-solves") {
+    import spark.implicits._
+    val verts = (alphaChain.flatMap(e => Seq(e._1, e._2)).distinct :+ "vz").toDF("id")
+    val edges = alphaChain.toDF("s", "d")
+    val out = ConnectedComponents.run(verts, "id", edges, "s", "d",
+      maxIter = 0, localSolveMax = 8000000L)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(out == Map("va" -> "va", "vb" -> "va", "vc" -> "va",
+      "vd" -> "va", "vz" -> "vz"))
+  }
+
+  test("connectedComponents: a long-keyed graph with localSolveMax = 7 driver-solves") {
+    import spark.implicits._
+    val verts = Seq(1L, 2L, 3L, 4L, 9L).toDF("id")
+    val edges = Seq(1L -> 2L, 2L -> 3L, 3L -> 4L).toDF("s", "d")
+    val out = ConnectedComponents.run(verts, "id", edges, "s", "d",
+      maxIter = 0, localSolveMax = 7L)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 9L -> 9L))
+  }
+
+  test("connectedComponents: the label loop leaves the caller's session adaptive") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.add(qe)
+    }
+    // a 40-chain scattered over 8 partitions: contraction leaves a
+    // chain-shaped quotient, so the loop (localSolveMax = 0) runs
+    // several rounds
+    val edges = (1L to 39L).map(i => (i, i + 1)).toDF("a", "b").repartition(8)
+    val vertices = (1L to 40L).toDF("v")
+    val sentinel = Seq(1).toDF("sentinel")
+    spark.listenerManager.register(listener)
+    try {
+      val got = ConnectedComponents.run(vertices, "v", edges, "a", "b",
+        localSolveMax = 0L).collect()
+      assert(got.length == 40 && got.forall(_.getLong(1) == 1L))
+      // listener events arrive in order on one queue: once the
+      // sentinel's is in, every earlier one is too
+      sentinel.collect()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.asScala.exists(_ eq sentinel.queryExecution) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    val (own, other) = seen.asScala.toSeq.partition(_.sparkSession eq spark)
+    assert(own.exists(_ eq sentinel.queryExecution), "sentinel event never arrived")
+    // an adaptive plan's root is a leaf (AdaptiveSparkPlanExec), so an
+    // Exchange visible in the executed tree means AQE was off
+    val nonAdaptive = own.filter(_.executedPlan.find(_.isInstanceOf[Exchange]).isDefined)
+    assert(nonAdaptive.isEmpty,
+      s"non-adaptive plans on the caller's session:\n${nonAdaptive.map(_.executedPlan).mkString("\n")}")
+    assert(other.nonEmpty, "the label loop ran on the caller's session")
+  }
+
   test("numeric-suffix codec: accepts only provably fixed-shape ids") {
     import spark.implicits._
     import org.apache.spark.sql.DataFrame
@@ -248,7 +346,7 @@ class OpsJoinSpec extends SparkSpecBase {
     // by hub — LSH buckets land together), whole stars collapse and
     // the deduped output is strictly smaller than the symmetrized
     // input: 40 hubs × 50 members in 8 partitions
-    val stars = (0 until 2000).map(i => (s"hub_${i % 40}", s"m_${i % 40}_${i / 40}"))
+    val stars = (0 until 2000).map(i => ((i % 40).toLong, 1000L + i))
       .toDF("src", "dst").repartition(8, col("src"))
     val cs = ConnectedComponents.contractLocal(stars).distinct().count()
     val ss = stars.unionByName(
@@ -257,13 +355,12 @@ class OpsJoinSpec extends SparkSpecBase {
     assert(cs <= ss, s"contracted $cs > symmetrized $ss on hub-clustered input")
   }
 
-  test("multi-pass contraction and batched probes leave labels identical") {
+  test("multi-pass contraction and the driver solve leave labels identical") {
     import spark.implicits._
     // the same adversarial random graph shape as the contraction spec:
     // rings + chords + dup/reversed edges across many partitions, so
     // pass 2's endpoint re-shuffle genuinely merges cross-partition
-    // fragments, and deep chains force several label rounds — the
-    // probeEvery overshoot path (convergence detected late) is hit
+    // fragments, and deep chains force several label rounds
     val rnd = new scala.util.Random(4321)
     val edges = ((0L until 390L).map(i => (i, i + rnd.nextInt(3) + 1)) ++
       (0 until 150).map(_ => (rnd.nextInt(400).toLong, rnd.nextInt(400).toLong)))
@@ -274,21 +371,12 @@ class OpsJoinSpec extends SparkSpecBase {
     // localSolveMax = 0 forces the distributed label loop; the default
     // takes the driver union-find over the same quotient — labels must
     // agree bit-for-bit across every configuration
-    for ((passes, probe, solve) <- Seq((2, 1, 0L), (3, 1, 0L), (1, 2, 0L),
-        (1, 3, 0L), (2, 2, 0L), (1, 1, 0L), (2, 1, 2000000L))) {
+    for ((passes, solve) <- Seq((2, 0L), (3, 0L), (1, 0L), (2, 2000000L))) {
       val got = ConnectedComponents.run(vertices, "v", edges, "a", "b",
-          contractPasses = passes, probeEvery = probe, localSolveMax = solve)
+          contractPasses = passes, localSolveMax = solve)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == base,
-        s"labels diverged at passes=$passes probe=$probe localSolveMax=$solve")
-    }
-    // maxIter still throws when the bound is too small for the graph,
-    // probing batched or not (the last round always probes)
-    val chain = (1L to 9L).map(i => (i, i + 1)).toDF("a", "b")
-    val chainV = (1L to 10L).toDF("v")
-    intercept[IllegalStateException] {
-      ConnectedComponents.run(chainV, "v", chain, "a", "b", maxIter = 3,
-        localContract = false, probeEvery = 2).collect()
+        s"labels diverged at passes=$passes localSolveMax=$solve")
     }
   }
 

@@ -37,14 +37,17 @@ class ProcessSpansSpec extends SparkSpecBase {
     }
     // the blank rule is String.trim (every char <= U+0020), not Spark's
     // trim (U+0020 only): the whitespace-only text spans go, the media
-    // span and the padded "a" stay as they are
+    // span and the padded "a" stay as they are. A null text is blank
+    // on a text span (dropped) and passes untouched on a media span.
     val whitespace = Doc("ws", Seq(
       Span(Span.KindText, "\t", "line://b0/l0", 0),
       Span(Span.KindText, "\n", "line://b0/l0", 1),
       Span(Span.KindText, "   ", "line://b0/l1", 2),
       Span(Span.KindText, "", "line://b0/l1", 3),
       Span(Span.KindText, " a\t", "line://b0/l2", 4),
-      Span(Span.KindMedia, "\t", "media://ws/0", 5)))
+      Span(Span.KindMedia, "\t", "media://ws/0", 5),
+      Span(Span.KindText, null, "line://b0/l3", 6),
+      Span(Span.KindMedia, null, "media://ws/1", 7)))
     val docs = generated :+ whitespace
     equivalent(docs, ExtractConfig())
     equivalent(docs, ExtractConfig(
